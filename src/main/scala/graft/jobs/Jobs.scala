@@ -13,8 +13,9 @@ import graft.validate.{ValidationReport, Validator}
   * (SURVEY §3.1): fetch (caller supplies the raw frame via a
   * connector) → transform chain → validation → upsert-or-append →
   * parquet table → metadata bookkeeping. One lazy plan end-to-end
-  * until the sink actions; per-dataset failures stay isolated in the
-  * caller's loop like ingest_data.py:180-210.
+  * until the table write, which also computes the validation report;
+  * per-dataset failures stay isolated in the caller's loop like
+  * ingest_data.py:180-210.
   *
   * [[ExportJob]] = `python scripts/export_static_data.py` (§3.3): run
   * the three §2.6 queries and write each FeatureCollection to a static
@@ -32,6 +33,11 @@ object IngestJob {
     * spec's unique keys; append when none declared — ingest_data.py:
     * 136-150) → metadata row. `dryRun` stops after validation
     * (ingest_data.py:108-116).
+    *
+    * One pass over the data: the validation metrics are observed on the
+    * frame the upsert (or append) writes, and read once the write has
+    * returned; the metadata row then merges in memory. A dry run
+    * validates with one job of its own and writes nothing.
     */
   def run(
       spark: SparkSession,
@@ -41,21 +47,25 @@ object IngestJob {
       warehouseDir: String,
       dryRun: Boolean = false): Result = {
     val transformed = transform(raw)
-    val report = Validator.validate(transformed, spec)
     val tableDir = s"$warehouseDir/${spec.tableName}"
-    if (!dryRun) {
-      val keys = spec.validation.uniqueKeys
-      if (keys.nonEmpty && keys.forall(transformed.columns.contains))
-        UpsertSink.upsertParquet(spark, tableDir, transformed, keys,
-          partitionBy = spec.partitionColumns)
+    val report =
+      if (dryRun) Validator.validate(transformed, spec)
       else {
-        val w = transformed.write.mode("append")
-        (if (spec.partitionColumns.nonEmpty)
-          w.partitionBy(spec.partitionColumns: _*) else w).parquet(tableDir)
+        val (observed, readReport) = Validator.observed(transformed, spec)
+        val keys = spec.validation.uniqueKeys
+        if (keys.nonEmpty && keys.forall(transformed.columns.contains))
+          UpsertSink.upsertParquet(spark, tableDir, observed, keys,
+            partitionBy = spec.partitionColumns)
+        else {
+          val w = observed.write.mode("append")
+          (if (spec.partitionColumns.nonEmpty)
+            w.partitionBy(spec.partitionColumns: _*) else w).parquet(tableDir)
+        }
+        val r = readReport()
+        MetadataTable.update(spark, s"$warehouseDir/dataset_metadata",
+          spec.datasetId, spec.tableName, r.rowCount)
+        r
       }
-      MetadataTable.update(spark, s"$warehouseDir/dataset_metadata",
-        spec.datasetId, spec.tableName, report.rowCount)
-    }
     Result(spec.key, tableDir, report.rowCount, report)
   }
 }
@@ -64,7 +74,8 @@ object ExportJob {
 
   /** Run the three production queries over the warehouse tables and
     * write the three static FeatureCollection files
-    * (export_static_data.py:118-151). Returns file → feature count.
+    * (export_static_data.py:118-151). Returns file → feature count,
+    * counted in the same aggregate that assembles the file.
     */
   def run(spark: SparkSession, warehouseDir: String, outDir: String): Map[String, Long] = {
     def table(name: String): DataFrame = spark.read.parquet(s"$warehouseDir/$name")
@@ -75,11 +86,7 @@ object ExportJob {
       ("poverty_by_zip.json", NycQueries.povertyByZip(zctas, table("census_acs_income_poverty"))),
       ("rent_by_zip.json", NycQueries.rentByZip(zctas, table("zillow_zori"))))
     exports.map { case (file, features) =>
-      val cached = features.cache()
-      val n = cached.count()
-      JsonFeatureSink.writeFeatureCollection(cached, s"$outDir/$file")
-      cached.unpersist()
-      file -> n
+      file -> JsonFeatureSink.writeFeatureCollection(features, s"$outDir/$file")
     }.toMap
   }
 }

@@ -61,23 +61,30 @@ object JsonFeatureSink {
     * Features are sorted for deterministic output (collect_list order is
     * partition-arrival order otherwise).
     */
-  def featureCollection(features: DataFrame, featureCol: String = "feature"): String = {
-    val row = features
-      .agg(array_join(sort_array(collect_list(col(featureCol))), ",").as("joined"))
-      .head()
-    val joined = if (row.isNullAt(0)) "" else row.getString(0)
-    s"""{"type":"FeatureCollection","features":[$joined]}"""
-  }
+  def featureCollection(features: DataFrame, featureCol: String = "feature"): String =
+    collectFeatures(features, featureCol)._1
 
   /** K6 — write one FeatureCollection file (driver-side single file,
-    * like the reference's json.dump).
+    * like the reference's json.dump). Returns the feature count, taken
+    * from the same aggregate.
     */
   def writeFeatureCollection(features: DataFrame, path: String,
-                             featureCol: String = "feature"): Unit = {
+                             featureCol: String = "feature"): Long = {
+    val (json, n) = collectFeatures(features, featureCol)
     val parent = Paths.get(path).getParent
     if (parent != null) Files.createDirectories(parent)
-    Files.write(Paths.get(path),
-      featureCollection(features, featureCol).getBytes(StandardCharsets.UTF_8))
+    Files.write(Paths.get(path), json.getBytes(StandardCharsets.UTF_8))
+    n
+  }
+
+  /** One aggregate: the FeatureCollection string and its row count. */
+  private def collectFeatures(features: DataFrame, featureCol: String): (String, Long) = {
+    val row = features
+      .agg(array_join(sort_array(collect_list(col(featureCol))), ",").as("joined"),
+        count(lit(1)).as("n"))
+      .head()
+    val joined = if (row.isNullAt(0)) "" else row.getString(0)
+    (s"""{"type":"FeatureCollection","features":[$joined]}""", row.getLong(1))
   }
 
   /** Scale path — distributed JSON-lines write (one Feature per line,

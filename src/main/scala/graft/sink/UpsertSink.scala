@@ -64,27 +64,23 @@ object UpsertSink {
     writeAtomic(merged, target, partitionBy)
   }
 
-  /** Write-new-then-swap (§7.5.4): materialize to a sibling temp dir,
-    * then swap directories so readers never observe a half-written
-    * table. (Two renames — not a transaction, but the window is a
-    * metadata op, not a data write.)
+  /** Write-new-then-swap (§7.5.4): write to a sibling temp dir, then
+    * swap directories so readers never observe a half-written table.
+    * (Two renames — not a transaction, but the window is a metadata op,
+    * not a data write.) The target is only touched after the write has
+    * returned, so `df` may itself read the target (the merge path does).
     */
-  private def writeAtomic(df: DataFrame, target: Path,
-                          partitionBy: Seq[String] = Nil): Unit = {
+  private[sink] def writeAtomic(df: DataFrame, target: Path,
+                                partitionBy: Seq[String] = Nil): Unit = {
     val tmp = target.resolveSibling(s"${target.getFileName}.tmp-${UUID.randomUUID()}")
-    // materialize fully before touching the target (the source may read
-    // the target itself)
-    df.cache().count()
-    try {
-      val writer = df.write.mode("overwrite")
-      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-        .parquet(tmp.toString)
-      val old = target.resolveSibling(s"${target.getFileName}.old-${UUID.randomUUID()}")
-      val existed = Files.exists(target)
-      if (existed) Files.move(target, old)
-      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-      if (existed) deleteRecursively(old)
-    } finally df.unpersist()
+    val writer = df.write.mode("overwrite")
+    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
+      .parquet(tmp.toString)
+    val old = target.resolveSibling(s"${target.getFileName}.old-${UUID.randomUUID()}")
+    val existed = Files.exists(target)
+    if (existed) Files.move(target, old)
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    if (existed) deleteRecursively(old)
   }
 
   private def deleteRecursively(p: Path): Unit = FsUtil.deleteRecursively(p)

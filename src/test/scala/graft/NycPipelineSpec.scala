@@ -1,8 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.catalog.Registry
 import graft.jobs.{ExportJob, IngestJob, Main => JobsMain}
@@ -24,6 +29,36 @@ class NycPipelineSpec extends SparkSpecBase {
   private val zips = NycWarehouseFixture.zips
 
   private lazy val warehouse = NycWarehouseFixture.build(spark)
+
+  /** Spark SQL executions (actions and writes) that `f` runs. Listener
+    * events arrive asynchronously but in order, so a marker query run
+    * before and after `f` brackets exactly its executions.
+    */
+  private def executionsDuring(f: => Unit): Int = {
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe.logical.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        seen.add(qe.logical.toString)
+    }
+    def mark(name: String): Unit = {
+      spark.range(1).toDF(name).collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.asScala.exists(_.contains(name)) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.asScala.exists(_.contains(name)), s"listener never saw marker $name")
+    }
+    spark.listenerManager.register(listener)
+    try {
+      mark("executions_start_marker")
+      f
+      mark("executions_end_marker")
+    } finally spark.listenerManager.unregister(listener)
+    val plans = seen.asScala.toSeq
+    plans.indexWhere(_.contains("executions_end_marker")) -
+      plans.indexWhere(_.contains("executions_start_marker")) - 1
+  }
 
   test("IngestJob lands validated tables + metadata for all five datasets") {
     val tables = Seq("ntas_2020", "food_supply_gaps", "census_zctas_2020",
@@ -114,8 +149,12 @@ class NycPipelineSpec extends SparkSpecBase {
     val dir = Files.createTempDirectory("graft-dryrun").toString
     val raw = Seq(("10001", "50000", "10", "100"))
       .toDF("zip code tabulation area", "B19013_001E", "B17020_002E", "B17020_001E")
-    val res = IngestJob.run(spark, Registry.censusAcs, raw,
-      Transformers.censusAcs(), dir, dryRun = true)
+    var res: IngestJob.Result = null
+    val executions = executionsDuring {
+      res = IngestJob.run(spark, Registry.censusAcs, raw,
+        Transformers.censusAcs(), dir, dryRun = true)
+    }
+    assert(executions == 1, "a dry run is one validation job")
     assert(res.recordCount == 1)
     assert(res.report.ok)
     assert(!Files.exists(Paths.get(s"$dir/census_acs_income_poverty")),
@@ -135,5 +174,19 @@ class NycPipelineSpec extends SparkSpecBase {
     // and the new batch's values won
     val z0 = after.filter(col("zip_code") === zips.head).head
     assert(z0.getAs[Double]("median_household_income") == 60000.0)
+  }
+
+  test("a writing ingest is one data pass: at most 3 Spark executions") {
+    // refresh of an existing table: the upsert write (which also
+    // computes the validation report), then the metadata read and write
+    val in = NycWarehouseFixture.inputs(spark).find(_.spec.key == "zillow_zori").get
+    val tableDir = s"$warehouse/zillow_zori"
+    var res: IngestJob.Result = null
+    val executions = executionsDuring {
+      res = IngestJob.run(spark, in.spec, in.raw, in.transform, warehouse)
+    }
+    assert(executions <= 3, s"ingest ran $executions executions")
+    assert(res.recordCount == 155 && res.report.ok)
+    assert(spark.read.parquet(tableDir).count() == 155)
   }
 }

@@ -2,10 +2,10 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.catalog.Registry
+import graft.catalog.{DatasetSpec, Registry}
 import graft.jobs.IngestJob
 import graft.transform.Transformers
 
@@ -28,16 +28,17 @@ object NycWarehouseFixture {
   def squareWkt(i: Int): String =
     s"POLYGON (($i 0, ${i + 1} 0, ${i + 1} 1, $i 1, $i 0))"
 
-  /** Build a fresh warehouse under a temp dir and return its path. */
-  def build(spark: SparkSession): String = {
+  /** One dataset's ingest inputs: spec, raw-shaped frame, transformer chain. */
+  final case class Input(spec: DatasetSpec, raw: DataFrame, transform: DataFrame => DataFrame)
+
+  /** The five raw sources, in ingest order. */
+  def inputs(spark: SparkSession): Seq[Input] = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-warehouse").toString
 
     // --- ntas_2020 (SODA raw shape) -> 197 geometry rows
     val ntasRaw = (0 until nNtas).map { i =>
       (f"NTA$i%03d", s"Neighborhood $i", "Brooklyn", s"$i", squareGeoJson(i))
     }.toDF("NTA2020", "NTAName", "BoroName", "BoroCode", "the_geom")
-    IngestJob.run(spark, Registry.ntas2020, ntasRaw, Transformers.ntas2020, dir)
 
     // --- food_supply_gap (SODA raw shape): 2022 + 2023 vintages, all NTAs
     val foodRaw = (0 until nNtas).flatMap { i =>
@@ -46,15 +47,11 @@ object NycWarehouseFixture {
           s"${i % 30}", s"${i % 10}", s"${i + 1}", (y.toLong * 1000) + i))
     }.toDF(":id", "Year", "NTA", "supply_gap_lbs", "Food Insecure Percentage",
       "unemployment_rate", "Vulnerable Population", "Rank", "Row Order")
-    IngestJob.run(spark, Registry.foodSupplyGap, foodRaw,
-      Transformers.foodSupplyGap(Seq(col("row_order"))), dir)
 
     // --- census_zctas_2020 (shapefile raw shape): 178 ZIP polygons
     val zctasRaw = zips.zipWithIndex
       .map { case (z, i) => (z, squareWkt(i)) }
       .toDF("ZCTA5CE20", "geometry")
-    IngestJob.run(spark, Registry.censusZctas2020, zctasRaw,
-      Transformers.censusZctas2020(zips), dir)
 
     // --- census_acs (census raw shape): one ZIP carries the sentinel
     //     income -> NULL -> excluded by the poverty query -> 177
@@ -62,7 +59,6 @@ object NycWarehouseFixture {
       val income = if (i == 42) "-666666666" else s"${50000 + i * 10}"
       (z, income, s"${5 + i % 50}", s"${100 + i}")
     }.toDF("zip code tabulation area", "B19013_001E", "B17020_002E", "B17020_001E")
-    IngestJob.run(spark, Registry.censusAcs, acsRaw, Transformers.censusAcs(), dir)
 
     // --- zillow_zori (wide CSV raw shape): 23 ZIPs have no rent at all
     //     -> dropped by dropna -> 155
@@ -72,9 +68,19 @@ object NycWarehouseFixture {
         if (hasRent) Some(2000.0 + i) else None,
         if (hasRent && i % 2 == 0) Some(2100.0 + i) else None)
     }.toDF("RegionID", "RegionName", "SizeRank", "2024-01-31", "2024-02-29")
-    IngestJob.run(spark, Registry.zillowZori, zillowRaw,
-      Transformers.zillowZori(zips), dir)
 
+    Seq(
+      Input(Registry.ntas2020, ntasRaw, Transformers.ntas2020),
+      Input(Registry.foodSupplyGap, foodRaw, Transformers.foodSupplyGap(Seq(col("row_order")))),
+      Input(Registry.censusZctas2020, zctasRaw, Transformers.censusZctas2020(zips)),
+      Input(Registry.censusAcs, acsRaw, Transformers.censusAcs()),
+      Input(Registry.zillowZori, zillowRaw, Transformers.zillowZori(zips)))
+  }
+
+  /** Build a fresh warehouse under a temp dir and return its path. */
+  def build(spark: SparkSession): String = {
+    val dir = Files.createTempDirectory("graft-warehouse").toString
+    inputs(spark).foreach(in => IngestJob.run(spark, in.spec, in.raw, in.transform, dir))
     dir
   }
 }
