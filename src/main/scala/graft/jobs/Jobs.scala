@@ -3,7 +3,6 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.catalog.DatasetSpec
-import graft.queries.NycQueries
 import graft.sink.{JsonFeatureSink, MetadataTable, UpsertSink}
 import graft.validate.{ValidationReport, Validator}
 
@@ -77,16 +76,9 @@ object ExportJob {
     * (export_static_data.py:118-151). Returns file → feature count,
     * counted in the same aggregate that assembles the file.
     */
-  def run(spark: SparkSession, warehouseDir: String, outDir: String): Map[String, Long] = {
-    def table(name: String): DataFrame = spark.read.parquet(s"$warehouseDir/$name")
-    val ntas = table("ntas_2020")
-    val zctas = table("census_zctas_2020")
-    val exports = Seq(
-      ("food_gaps.json", NycQueries.foodGaps(ntas, table("food_supply_gaps"))),
-      ("poverty_by_zip.json", NycQueries.povertyByZip(zctas, table("census_acs_income_poverty"))),
-      ("rent_by_zip.json", NycQueries.rentByZip(zctas, table("zillow_zori"))))
-    exports.map { case (file, features) =>
-      file -> JsonFeatureSink.writeFeatureCollection(features, s"$outDir/$file")
+  def run(spark: SparkSession, warehouseDir: String, outDir: String): Map[String, Long] =
+    Main.endpoints.map { case (endpoint, file) =>
+      file -> JsonFeatureSink.writeFeatureCollection(
+        Main.namedQuery(spark, warehouseDir, endpoint), s"$outDir/$file")
     }.toMap
-  }
 }

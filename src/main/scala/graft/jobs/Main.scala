@@ -204,6 +204,16 @@ object Main {
     spark.sql(statement)
   }
 
+  /** The three serving endpoints (routes.py) and the static file each
+    * one exports to (export_static_data.py:118-151). [[ExportJob]] and
+    * [[graft.serve.ApiServer]] both iterate this list through
+    * [[namedQuery]], so the files and the HTTP bodies cannot drift.
+    */
+  val endpoints: Seq[(String, String)] = Seq(
+    "food-gaps" -> "food_gaps.json",
+    "poverty-by-zip" -> "poverty_by_zip.json",
+    "rent-by-zip" -> "rent_by_zip.json")
+
   /** The three named serving queries (routes.py endpoints) over a
     * warehouse — returns the per-feature frame; the CLI wraps it into
     * the FeatureCollection payload the HTTP route returns.
@@ -219,7 +229,7 @@ object Main {
       case "rent-by-zip" =>
         NycQueries.rentByZip(table("census_zctas_2020"), table("zillow_zori"))
       case other => throw new IllegalArgumentException(
-        s"unknown query '$other' (known: food-gaps, poverty-by-zip, rent-by-zip)")
+        s"unknown query '$other' (known: ${endpoints.map(_._1).mkString(", ")})")
     }
   }
 
@@ -322,7 +332,7 @@ object Main {
         val server = new graft.serve.ApiServer(spark, warehouse)
         val port = server.start(requested)
         println(s"[serve] listening on http://127.0.0.1:$port " +
-          "(endpoints: /api/food-gaps /api/poverty-by-zip /api/rent-by-zip)")
+          s"(endpoints: ${endpoints.map("/api/" + _._1).mkString(" ")})")
         val lock = new Object
         // loop: Object.wait permits spurious wakeups, and falling out
         // of this arm would hit the finally's spark.stop() and tear

@@ -38,8 +38,8 @@ import graft.sink.JsonFeatureSink
   * string memoizes for the server's lifetime, so steady-state
   * requests run zero Spark actions (the reference re-executes SQL
   * per request; this is our in-process equivalent of its preferred
-  * static-export tier). Endpoint wiring is
-  * [[graft.jobs.Main.namedQuery]] — one definition shared with the
+  * static-export tier). Endpoint wiring is [[graft.jobs.Main.endpoints]]
+  * + [[graft.jobs.Main.namedQuery]] — one definition shared with the
   * CLI and batch export, byte-parity pinned by ApiServerSpec. The
   * server is the JDK's built-in [[HttpServer]] — zero dependencies,
   * loopback bindable on an ephemeral port, so specs drive the full
@@ -55,8 +55,8 @@ final class ApiServer(
 
   private val gzipMinBytes = 1000
 
-  // Endpoint wiring lives in ONE place — graft.jobs.Main.namedQuery —
-  // so the HTTP body and the CLI/export payloads can never drift
+  // Endpoint wiring lives in ONE place — graft.jobs.Main.endpoints and
+  // namedQuery — so the HTTP body and the CLI/export payloads can never drift
   // (ApiServerSpec pins byte parity). Rendered bodies memoize per
   // endpoint: the frames are deterministic bounded collections for
   // the server's lifetime, so steady-state requests run ZERO Spark
@@ -73,19 +73,17 @@ final class ApiServer(
     * including poverty-by-zip: its routes.py:95-97 `if not result`
     * fallback is dead code (the one-row json_build_object dict is
     * always truthy), so the `features:[]` branch never runs there
-    * either.
+    * either. The emptiness test is the row count of the same aggregate
+    * that renders the body, so a cold render is one Spark job.
     */
-  private[serve] def collectionBody(features: DataFrame): String =
-    if (features.isEmpty) """{"type":"FeatureCollection","features":null}"""
-    else JsonFeatureSink.featureCollection(features)
+  private def collectionBody(features: DataFrame): String = {
+    val (body, n) = JsonFeatureSink.collectFeatures(features)
+    if (n == 0) """{"type":"FeatureCollection","features":null}""" else body
+  }
 
   private def endpointBody(name: String): String =
     bodyMemo.getOrElseUpdate(name,
       collectionBody(graft.jobs.Main.namedQuery(spark, warehouseDir, name)))
-
-  private[serve] def foodGapsBody(): String = endpointBody("food-gaps")
-  private[serve] def povertyByZipBody(): String = endpointBody("poverty-by-zip")
-  private[serve] def rentByZipBody(): String = endpointBody("rent-by-zip")
 
   private var server: Option[HttpServer] = None
 
@@ -97,9 +95,9 @@ final class ApiServer(
     require(server.isEmpty, "already started")
     val s = HttpServer.create(new InetSocketAddress("127.0.0.1", requestedPort), 0)
     s.createContext("/", handler(() => """{"message":"graft serving API"}"""))
-    s.createContext("/api/food-gaps", handler(() => foodGapsBody()))
-    s.createContext("/api/poverty-by-zip", handler(() => povertyByZipBody()))
-    s.createContext("/api/rent-by-zip", handler(() => rentByZipBody()))
+    graft.jobs.Main.endpoints.foreach { case (name, _) =>
+      s.createContext(s"/api/$name", handler(() => endpointBody(name)))
+    }
     s.start()
     server = Some(s)
     s.getAddress.getPort

@@ -78,7 +78,8 @@ object JsonFeatureSink {
   }
 
   /** One aggregate: the FeatureCollection string and its row count. */
-  private def collectFeatures(features: DataFrame, featureCol: String): (String, Long) = {
+  private[graft] def collectFeatures(features: DataFrame,
+                                     featureCol: String = "feature"): (String, Long) = {
     val row = features
       .agg(array_join(sort_array(collect_list(col(featureCol))), ",").as("joined"),
         count(lit(1)).as("n"))

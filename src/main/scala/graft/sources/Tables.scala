@@ -68,35 +68,28 @@ object Tables {
     } catch { case _: java.io.IOException => s"unreadable:${System.nanoTime()}" }
   }
 
-  /** A/B kill-switch: SPARK_GRAFT_RELATION_MEMO=0 restores the
-    * resolve-per-call behavior. For back-to-back bench adjudication legs
-    * ONLY — the 5 self-join-shape queries' plan fingerprints
+  /** Resolve `sfDir/name.parquet` through the relation memo — always:
+    * the self-join-shape queries' plan fingerprints
     * (sf10_exponent_pins.json) encode the shared-relation exprId
-    * numbering, so FingerprintDumpMain / Sf10GateSpec runs must keep the
-    * memo at its default (on) or the pin gate trips confusingly.
+    * numbering the memo produces.
     */
-  private val memoEnabled: Boolean =
-    sys.env.get("SPARK_GRAFT_RELATION_MEMO").forall(_ != "0")
-
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    if (!memoEnabled) spark.read.parquet(s"$sfDir/$name.parquet")
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    // sweep entries owned by stopped sessions (tiny map: sessions x
+    // tables, so a full pass per load is cheaper than any bookkeeping)
+    relationMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
+    val path = s"$sfDir/$name.parquet"
+    val sig = contentSignature(java.nio.file.Paths.get(path))
+    val key = (spark, path)
+    val cur = relationMemo.get(key)
+    if (cur != null && cur._1 == sig) cur._2
     else {
-      // sweep entries owned by stopped sessions (tiny map: sessions x
-      // tables, so a full pass per load is cheaper than any bookkeeping)
-      relationMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-      val path = s"$sfDir/$name.parquet"
-      val sig = contentSignature(java.nio.file.Paths.get(path))
-      val key = (spark, path)
-      val cur = relationMemo.get(key)
-      if (cur != null && cur._1 == sig) cur._2
-      else {
-        // benign race: two threads may resolve concurrently; last insert
-        // wins and both frames are equally valid (metadata-only)
-        val df = spark.read.parquet(path)
-        relationMemo.put(key, (sig, df))
-        df
-      }
+      // benign race: two threads may resolve concurrently; last insert
+      // wins and both frames are equally valid (metadata-only)
+      val df = spark.read.parquet(path)
+      relationMemo.put(key, (sig, df))
+      df
     }
+  }
 
   /** Register every table as a temp view named after itself (idempotent). */
   def registerAll(spark: SparkSession, sfDir: String): Unit =

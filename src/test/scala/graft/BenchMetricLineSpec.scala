@@ -68,4 +68,32 @@ class BenchMetricLineSpec extends AnyFunSuite {
     assert(node.get("queries").size() > 0,
       "the queries map must keep at least the slowest entries")
   }
+
+  test("long output and corpus paths: the headline shrinks so the line stays under budget") {
+    val qs = syntheticQueries(300)
+    Seq(400, 800).foreach { n =>
+      val out = "/" + "o" * (n - 16) + "/bench_out.json"
+      val sf = "/" + "d" * (n - 8) + "/sf0.1"
+      val line = Bench.stdoutLine(fullLine(qs), qs.map(_._2).sum, qs,
+        qs.take(60).map(_._1), Nil, out, sf, Some(300))
+      assert(line.length <= Bench.stdoutBudget,
+        s"$n-char paths: metric line ${line.length} chars exceeds the ${Bench.stdoutBudget} tail budget")
+      assert(!line.contains("\n"))
+      val node = mapper.readTree(line)
+      assert(node.get("metric").asText() == "total")
+      assert(node.get("n_queries").asInt() == 300)
+      assert(node.get("n_failed").asInt() == 60)
+      assert(node.get("queries_full").asText() == "bench_out.json")
+      assert(node.get("sf").asText() == "sf0.1")
+      assert(node.get("queries").size() > 0,
+        "the queries map must keep at least the slowest entries")
+    }
+    // a basename too long for half the budget: the paths are left out
+    val line = Bench.stdoutLine(fullLine(qs), qs.map(_._2).sum, qs,
+      Nil, Nil, "o" * 900, "d" * 900, None)
+    assert(line.length <= Bench.stdoutBudget)
+    val node = mapper.readTree(line)
+    assert(!node.has("queries_full") && !node.has("sf"))
+    assert(node.get("queries").size() > 0)
+  }
 }
