@@ -1,7 +1,9 @@
 package graft.functions
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
@@ -28,8 +30,8 @@ import org.apache.spark.sql.functions._
   * retrieval reuses the same probe → equi-join → exact rerank tail
   * ([[IvfFunctions.rerankProbed]]) — k = 10^6 costs two ~1000-row
   * broadcasts instead of one impossible 10^6-row one.
-  * Residuals are float-rounded per [[IvfFunctions.residualUdf]]'s
-  * contract so assignment reproduces training bit-for-bit.
+  * Residuals are float-rounded by the one [[IvfFunctions.residual]]
+  * kernel, so assignment reproduces training bit-for-bit.
   *
   * The disclosed trade (why this is the PAST-THE-CAP path, not the
   * default): the shared residual codebook sees each cell's vectors
@@ -113,8 +115,10 @@ object HierarchicalIvf {
                 bcR: Broadcast[Array[Array[Double]]]): UserDefinedFunction =
     udf { v: Seq[Float] =>
       val a = IvfFunctions.toFloatArray(v)
-      val (scid, _) = argmin(a, bcS.value)
-      listId(a, scid, bcS.value, bcR.value)
+      val sup = bcS.value
+      val scid = IvfFunctions.argmin(a, 0, sup)
+      val rcid = IvfFunctions.argmin(IvfFunctions.residual(a, sup(scid)), 0, bcR.value)
+      scid.toLong * bcR.value.length + rcid
     }
 
   /** The `nProbeSuper × nProbeResid` composite list ids nearest a query:
@@ -131,16 +135,11 @@ object HierarchicalIvf {
       val a = IvfFunctions.toFloatArray(v)
       val sup = bcS.value
       val res = bcR.value
-      val topS = sup.indices
-        .map(c => (IvfFunctions.l2sq(a, sup(c)), c))
-        .sorted.take(nProbeSuper).map(_._2)
-      topS.flatMap { scid =>
-        val r = residual(a, sup(scid))
-        res.indices
-          .map(c => (IvfFunctions.l2sq(r, res(c)), c))
-          .sorted.take(nProbeResid)
-          .map { case (_, rcid) => scid.toLong * res.length + rcid }
-      }
+      ArraySeq.unsafeWrapArray(
+        IvfFunctions.nearest(a, sup, nProbeSuper).flatMap { scid =>
+          IvfFunctions.nearest(IvfFunctions.residual(a, sup(scid)), res, nProbeResid)
+            .map(rcid => scid.toLong * res.length + rcid)
+        })
     }
 
   /** End-to-end hierarchical IVF top-k: composite-list index, probe
@@ -155,37 +154,5 @@ object HierarchicalIvf {
       explode(probeUdf(bcS, bcR, nProbeSuper, nProbeResid)(col("embedding")))
         .as("cid"))
     IvfFunctions.rerankProbed(lists, probed, topK)
-  }
-
-  /** Composite id for one already-super-assigned vector. */
-  private def listId(a: Array[Float], scid: Int,
-                     sup: Array[Array[Double]],
-                     res: Array[Array[Double]]): Long = {
-    val r = residual(a, sup(scid))
-    val (rcid, _) = argmin(r, res)
-    scid.toLong * res.length + rcid
-  }
-
-  /** Float-rounded residual — the exact [[IvfFunctions.residualUdf]]
-    * sequence, so assignment matches what codebook 2 trained on.
-    */
-  private def residual(a: Array[Float], c: Array[Double]): Array[Float] = {
-    val out = new Array[Float](a.length)
-    var i = 0
-    while (i < a.length) { out(i) = (a(i).toDouble - c(i)).toFloat; i += 1 }
-    out
-  }
-
-  private def argmin(a: Array[Float],
-                     centroids: Array[Array[Double]]): (Int, Double) = {
-    var best = 0
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < centroids.length) {
-      val d = IvfFunctions.l2sq(a, centroids(c))
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    (best, bestD)
   }
 }

@@ -1,10 +1,12 @@
 package graft.functions
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 
 /** IVF (inverted-file) approximate nearest neighbor — the coarse-
@@ -296,20 +298,72 @@ object IvfFunctions {
     * an immutable.ArraySeq.ofFloat wrapping the primitive float[]
     * (toImmutableArraySeq in the deserializer), so the k·d argmin loop
     * must run on the raw array — a boxed Seq#apply per element is a
-    * ~5-10× tax exactly where assignment is O(n·k·d). Shared with the
-    * PQ encode loop.
+    * ~5-10× tax exactly where assignment is O(n·k·d).
     */
-  private[functions] def toFloatArray(v: Seq[Float]): Array[Float] = v match {
-    case w: scala.collection.immutable.ArraySeq.ofFloat => w.unsafeArray
+  private[graft] def toFloatArray(v: Seq[Float]): Array[Float] = v match {
+    case w: ArraySeq.ofFloat => w.unsafeArray
     case _ => v.toArray
   }
 
-  private[functions] def l2sq(v: Array[Float], c: Array[Double]): Double = {
+  // ---------------------------------------------------------------
+  // The quantizer kernels. Every IVF, PQ and hierarchical-IVF UDF is a
+  // thin wrapper over these, and the oracle replays each of them in
+  // SQL: keep their operand order and tie-breaks fixed.
+  // ---------------------------------------------------------------
+
+  /** Squared L2 from `v` starting at `off` to `c`: a sequential double
+    * fold, i ascending over min(c.length, v.length − off), each float
+    * widened to double before the subtraction.
+    */
+  private[graft] def l2sq(v: Array[Float], off: Int, c: Array[Double]): Double = {
     var s = 0.0
     var i = 0
-    val n = math.min(v.length, c.length)
-    while (i < n) { val d = v(i) - c(i); s += d * d; i += 1 }
+    val n = math.min(c.length, v.length - off)
+    while (i < n) { val d = v(off + i) - c(i); s += d * d; i += 1 }
     s
+  }
+
+  /** Index of the `table` row nearest `v` from `off`: strict `<` from
+    * Double.MaxValue, so ties go to the lowest index and NaN never wins
+    * (a non-finite vector whose distances are all NaN gets index 0).
+    */
+  private[graft] def argmin(v: Array[Float], off: Int,
+                            table: Array[Array[Double]]): Int = {
+    var best = 0
+    var bestD = Double.MaxValue
+    var c = 0
+    while (c < table.length) {
+      val d = l2sq(v, off, table(c))
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** The `n` indices of the `table` rows nearest `v`, ordered by
+    * java.lang.Double.compare on the distance, then by index (a stable
+    * sort of ascending indices). Unlike [[argmin]], NaN sorts last and
+    * +Inf ranks ahead of it, so the two differ on such rows.
+    */
+  private[graft] def nearest(v: Array[Float], table: Array[Array[Double]],
+                             n: Int): Array[Int] = {
+    val d = table.map(l2sq(v, 0, _))
+    Array.range(0, table.length).sortBy(d(_))(Ordering.Double.TotalOrdering)
+      .take(n)
+  }
+
+  /** Residual r = v − c, rounded back to FLOAT per element (one double
+    * subtraction + one float rounding — the exact sequence
+    * `CAST(CAST(x AS DOUBLE) - c AS FLOAT)` replays in SQL). Float
+    * residuals let IVF-PQ reuse every float PQ kernel (encode, ADC)
+    * unchanged, at a quantization already far coarser than the lost
+    * bits.
+    */
+  private[graft] def residual(v: Array[Float], c: Array[Double]): Array[Float] = {
+    val out = new Array[Float](v.length)
+    var i = 0
+    while (i < v.length) { out(i) = (v(i).toDouble - c(i)).toFloat; i += 1 }
+    out
   }
 
   /** Ship the centroid table to executors once (TorrentBroadcast). */
@@ -319,19 +373,7 @@ object IvfFunctions {
 
   /** Nearest-centroid (inverted list) id. */
   def assignUdf(bc: Broadcast[Array[Array[Double]]]): UserDefinedFunction =
-    udf { v: Seq[Float] =>
-      val a = toFloatArray(v)
-      val centroids = bc.value
-      var best = 0
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < centroids.length) {
-        val d = l2sq(a, centroids(c))
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      best
-    }
+    udf { v: Seq[Float] => argmin(toFloatArray(v), 0, bc.value) }
 
   /** Nearest-centroid id plus the squared L2 distance to it — the
     * assignment SemDeDup ranks within (distance to centroid is its
@@ -341,47 +383,23 @@ object IvfFunctions {
   def assignWithDistUdf(bc: Broadcast[Array[Array[Double]]]): UserDefinedFunction =
     udf { v: Seq[Float] =>
       val a = toFloatArray(v)
-      val centroids = bc.value
-      var best = 0
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < centroids.length) {
-        val d = l2sq(a, centroids(c))
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      // re-derive the winning distance rather than reporting the fold
-      // accumulator: for a non-finite vector no NaN comparison ever
-      // lands, so bestD would surface as Double.MaxValue where every
-      // oracle recomputation of ||x - c||² says NaN
-      (best, l2sq(a, centroids(best)))
+      val best = argmin(a, 0, bc.value)
+      // re-derive the winning distance: for a non-finite vector no NaN
+      // comparison ever lands, and every oracle recomputation of
+      // ||x - c||² says NaN, not Double.MaxValue
+      (best, l2sq(a, 0, bc.value(best)))
     }
 
-  /** Residual r = x − centroid(cid), rounded back to FLOAT per element
-    * (one double subtraction + one float rounding — the exact sequence
-    * `CAST(CAST(x AS DOUBLE) - c AS FLOAT)` replays in SQL). Float
-    * residuals let IVF-PQ reuse every float PQ kernel (encode, ADC)
-    * unchanged, at a quantization already far coarser than the lost
-    * bits.
-    */
+  /** Float-rounded [[residual]] against centroid `cid`. */
   def residualUdf(bc: Broadcast[Array[Array[Double]]]): UserDefinedFunction =
     udf { (v: Seq[Float], cid: Int) =>
-      val a = toFloatArray(v)
-      val c = bc.value(cid)
-      val out = new Array[Float](a.length)
-      var i = 0
-      while (i < a.length) { out(i) = (a(i).toDouble - c(i)).toFloat; i += 1 }
-      out.toSeq
+      ArraySeq.unsafeWrapArray(residual(toFloatArray(v), bc.value(cid)))
     }
 
-  /** The `nProbe` nearest centroid ids for a query vector. */
+  /** The `nProbe` [[nearest]] centroid ids for a query vector. */
   def probeUdf(bc: Broadcast[Array[Array[Double]]], nProbe: Int): UserDefinedFunction =
     udf { v: Seq[Float] =>
-      val a = toFloatArray(v)
-      val centroids = bc.value
-      centroids.indices
-        .map(c => (l2sq(a, centroids(c)), c))
-        .sorted.take(nProbe).map(_._2)
+      ArraySeq.unsafeWrapArray(nearest(toFloatArray(v), bc.value, nProbe))
     }
 
   /** End-to-end IVF top-k: index `emb`, answer `queries` (vec_id,
@@ -414,18 +432,24 @@ object IvfFunctions {
     */
   private[graft] def rerankProbed(lists: DataFrame, probed: DataFrame,
                                       topK: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     graft.expressions.CosineSimilarity.ensureRegistered(lists.sparkSession)
-    lists.join(broadcast(probed), Seq("cid"))
+    topKPerQuery(lists.join(broadcast(probed), Seq("cid"))
       .filter(col("query_id") =!= col("vec_id"))
       .dropDuplicates("query_id", "vec_id")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        VectorFunctions.fastCosine(col("q_emb"), col("embedding")).as("score"))
-      .withColumn("rank", row_number().over(
+        VectorFunctions.fastCosine(col("q_emb"), col("embedding")).as("score")),
+      topK)
+  }
+
+  /** Per-query top-k of (query_id, neighbor_id, score) by (score desc,
+    * neighbor_id asc), in (query_id, rank) order — the epilogue every
+    * ANN path ranks with.
+    */
+  private[graft] def topKPerQuery(scored: DataFrame, topK: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(
         Window.partitionBy(col("query_id"))
           .orderBy(col("score").desc, col("neighbor_id").asc)))
       .filter(col("rank") <= topK)
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("score"))
       .orderBy(col("query_id").asc, col("rank").asc)
-  }
 }

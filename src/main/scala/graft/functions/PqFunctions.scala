@@ -1,8 +1,10 @@
 package graft.functions
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -20,10 +22,11 @@ import org.apache.spark.storage.StorageLevel
   *     codebook table — fuses into the scan, no shuffle.
   *   - SEARCH (ADC, asymmetric distance computation): per query,
   *     precompute the m×k table of squared L2 distances from the
-  *     query's subvectors to every code centroid; a candidate's
-  *     approximate distance is the j-ascending sum of table[j][code_j]
-  *     — codes-only until the final exact-cosine rerank of the top-C
-  *     cut.
+  *     query's subvectors to every code centroid ([[adcTable]],
+  *     flattened to `[j * k + code]`); a candidate's approximate
+  *     distance is the j-ascending sum of table[j * k + code_j] —
+  *     codes-only until the final exact-cosine rerank of the top-C cut
+  *     ([[adcRerank]]).
   *
   * Determinism contract (oracle replay): subvector slicing, the argmin
   * tie-break (distance ASC, code ASC), the per-subspace distance fold
@@ -59,113 +62,52 @@ object PqFunctions {
       : Broadcast[Array[Array[Array[Double]]]] =
     emb.sparkSession.sparkContext.broadcast(cb)
 
-  private def l2sqSub(v: Array[Float], off: Int, c: Array[Double]): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < c.length) {
-      val d = v(off + i) - c(i)
-      s += d * d
-      i += 1
+  /** Flattened ADC table of `v` (a raw query or a float-rounded
+    * residual): entry `[j * 16 + code]` is the squared L2 from v's
+    * subspace j to that code centroid, j ascending. Every PQ search
+    * builds its query tables with this one kernel.
+    */
+  private[graft] def adcTable(v: Array[Float],
+                              cb: Array[Array[Array[Double]]]): Array[Double] = {
+    val out = new Array[Double](cb.length * codesPerSubspace)
+    var j = 0
+    while (j < cb.length) {
+      var t = 0
+      while (t < cb(j).length) {
+        out(j * codesPerSubspace + t) = IvfFunctions.l2sq(v, j * subDim, cb(j)(t))
+        t += 1
+      }
+      j += 1
     }
-    s
+    out
   }
-
-  private def toFloatArray(v: Seq[Float]): Array[Float] =
-    IvfFunctions.toFloatArray(v)
 
   /** PQ encode: the m argmin codes, j ascending (ties → lowest code). */
   def encodeUdf(bc: Broadcast[Array[Array[Array[Double]]]]): UserDefinedFunction =
     udf { v: Seq[Float] =>
-      val a = toFloatArray(v)
+      val a = IvfFunctions.toFloatArray(v)
       val cb = bc.value
       val out = new Array[Int](cb.length)
       var j = 0
-      while (j < cb.length) {
-        val codes = cb(j)
-        var best = 0
-        var bestD = Double.MaxValue
-        var i = 0
-        while (i < codes.length) {
-          val d = l2sqSub(a, j * subDim, codes(i))
-          if (d < bestD) { bestD = d; best = i }
-          i += 1
-        }
-        out(j) = best
-        j += 1
-      }
-      out.toSeq
+      while (j < cb.length) { out(j) = IvfFunctions.argmin(a, j * subDim, cb(j)); j += 1 }
+      ArraySeq.unsafeWrapArray(out)
     }
 
-  /** Per-query ADC tables: [m][k] squared L2 from the query's
-    * subvectors to every code centroid (the same fixed-order fold the
-    * encode argmin uses).
-    */
-  def adcTables(query: Array[Float],
-                cb: Array[Array[Array[Double]]]): Array[Array[Double]] =
-    Array.tabulate(cb.length) { j =>
-      Array.tabulate(cb(j).length)(i => l2sqSub(query, j * subDim, cb(j)(i)))
-    }
-
-  /** ADC distance: j-ascending sum of table[j][code_j]. */
-  def adcUdf(bc: Broadcast[Map[Long, Array[Array[Double]]]]): UserDefinedFunction =
-    udf { (queryId: Long, codes: Seq[Int]) =>
-      val tabs = bc.value(queryId)
-      var s = 0.0
-      var j = 0
-      while (j < tabs.length) { s += tabs(j)(codes(j)); j += 1 }
-      s
-    }
-
-  /** [[adcUdf]] keyed by (query, inverted list): IVF-PQ precomputes one
-    * ADC table per PROBED list because the query residual differs per
-    * coarse centroid.
-    */
-  def adcByListUdf(bc: Broadcast[Map[(Long, Int), Array[Array[Double]]]])
-      : UserDefinedFunction =
-    udf { (queryId: Long, cid: Int, codes: Seq[Int]) =>
-      val tabs = bc.value((queryId, cid))
-      var s = 0.0
-      var j = 0
-      while (j < tabs.length) { s += tabs(j)(codes(j)); j += 1 }
-      s
-    }
-
-  /** Per-(query, probed-list) ADC table computed ON EXECUTORS from the
-    * broadcast centroids + codebooks, returned FLATTENED
-    * (`[j * k + code]`, j ascending). This lifts the fixed-query-set
-    * driver bound (r13 verdict #2): nothing about the query batch ever
-    * collects, so a corpus-sized batch (the kNN-graph-over-index
-    * retrieval shape) streams through the scan. Bit-identical to the
-    * driver-side [[adcTables]]: the residual is the same
-    * `(q_i − c_i).toFloat` per element and every table entry is the
-    * same [[l2sqSub]] fixed-order fold.
+  /** Per-(query, probed-list) [[adcTable]] of the query's residual,
+    * computed ON EXECUTORS from the broadcast centroids + codebooks, so
+    * the query batch never collects and a corpus-sized batch (the
+    * kNN-graph-over-index retrieval shape) streams through the scan.
     */
   def adcTableUdf(bcC: Broadcast[Array[Array[Double]]],
                   bcCb: Broadcast[Array[Array[Array[Double]]]])
       : UserDefinedFunction =
     udf { (v: Seq[Float], cid: Int) =>
-      val q = toFloatArray(v)
-      val c = bcC.value(cid)
-      val r = new Array[Float](q.length)
-      var i = 0
-      while (i < q.length) { r(i) = (q(i).toDouble - c(i)).toFloat; i += 1 }
-      val cb = bcCb.value
-      val out = new Array[Double](cb.length * codesPerSubspace)
-      var j = 0
-      while (j < cb.length) {
-        var t = 0
-        while (t < cb(j).length) {
-          out(j * codesPerSubspace + t) = l2sqSub(r, j * subDim, cb(j)(t))
-          t += 1
-        }
-        j += 1
-      }
-      out.toSeq
+      val r = IvfFunctions.residual(IvfFunctions.toFloatArray(v), bcC.value(cid))
+      ArraySeq.unsafeWrapArray(adcTable(r, bcCb.value))
     }
 
-  /** j-ascending ADC fold over a [[adcTableUdf]]-flattened table — the
-    * executor-side twin of [[adcByListUdf]]: same additions, same
-    * order, bit-identical result.
+  /** ADC distance: the j-ascending sum of `tabs[j * 16 + code_j]` over
+    * an [[adcTable]]-flattened table.
     */
   def adcFlatUdf: UserDefinedFunction =
     udf { (tabs: Seq[Double], codes: Seq[Int]) =>
@@ -174,4 +116,59 @@ object PqFunctions {
       while (j < codes.length) { s += tabs(j * codesPerSubspace + codes(j)); j += 1 }
       s
     }
+
+  /** Each query's `nProbe` nearest lists: (query_id, embedding, cid). */
+  def probePairs(queries: DataFrame, bcC: Broadcast[Array[Array[Double]]],
+                 nProbe: Int): DataFrame =
+    queries.select(col("vec_id").as("query_id"), col("embedding"),
+      explode(IvfFunctions.probeUdf(bcC, nProbe)(col("embedding"))).as("cid"))
+
+  /** The IVF-PQ search core, shared by the in-session and the
+    * materialized-index paths: each probed (query, list) pair gets the
+    * ADC table of the query's residual in that list, joins the coded
+    * lists (cid, vec_id, cs) on `cid`, and goes through [[adcRerank]].
+    * `broadcastProbe` hints the probe side for bounded query batches;
+    * false lets a corpus-sized batch shuffle to the lists' layout.
+    */
+  def ivfAdcRerank(lists: DataFrame, probePairs: DataFrame,
+                   corpusVecs: DataFrame,
+                   bcC: Broadcast[Array[Array[Double]]],
+                   bcCb: Broadcast[Array[Array[Array[Double]]]],
+                   pqCandidates: Int, topK: Int,
+                   broadcastProbe: Boolean): DataFrame = {
+    val probed = probePairs.select(col("query_id"), col("cid"),
+      adcTableUdf(bcC, bcCb)(col("embedding"), col("cid")).as("adct"))
+    adcRerank(
+      lists.join(if (broadcastProbe) broadcast(probed) else probed, Seq("cid")),
+      corpusVecs, pqCandidates, topK)
+  }
+
+  /** The tail of every PQ search. `pairs` holds (query_id, vec_id,
+    * adct, cs): a query's flattened ADC table next to a candidate's
+    * codes. Self-pairs drop, the ADC fold ranks each query's candidates
+    * (adc ASC, vec_id ASC), the top `pqCandidates` fetch their float
+    * vectors from `corpusVecs` (vec_id, embedding), and exact cosine
+    * reranks them to `topK`.
+    */
+  def adcRerank(pairs: DataFrame, corpusVecs: DataFrame,
+                pqCandidates: Int, topK: Int): DataFrame = {
+    graft.expressions.CosineSimilarity.ensureRegistered(pairs.sparkSession)
+    val cand = pairs
+      .filter(col("query_id") =!= col("vec_id"))
+      .withColumn("adc", adcFlatUdf(col("adct"), col("cs")))
+      .withColumn("crank", row_number().over(
+        Window.partitionBy(col("query_id"))
+          .orderBy(col("adc").asc, col("vec_id").asc)))
+      .filter(col("crank") <= pqCandidates)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"))
+    val vecs = corpusVecs.select(col("vec_id"), col("embedding"))
+    IvfFunctions.topKPerQuery(cand
+      .join(vecs.select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
+        Seq("query_id"))
+      .join(vecs.select(col("vec_id").as("neighbor_id"), col("embedding")),
+        Seq("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        VectorFunctions.fastCosine(col("q_emb"), col("embedding")).as("score")),
+      topK)
+  }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 import graft.sources.Tables
+import graft.functions.{IvfFunctions, PqFunctions}
 import graft.functions.VectorFunctions._
 
 /** Similarity search over `embeddings` (64-dim float vectors).
@@ -84,17 +85,6 @@ object SimilarityQ {
        |    ${oracleL2sq("e.embedding", "ct.c")} AS d
        |  FROM embeddings e CROSS JOIN cents ct)""".stripMargin
 
-  /** Shared ANN epilogue: per-query top-k by (score desc, id asc) —
-    * one definition so the three retrieval paths rank identically.
-    */
-  private def topKPerQuery(scored: DataFrame): DataFrame =
-    scored.withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("score").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= topK)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("score"))
-      .orderBy(col("query_id").asc, col("rank").asc)
-
   /** Per-dimension corpus min/max — the stats pass shared by the
     * quantization query (joins it distributively) and the quantized
     * ANN path (collects its 64 rows for a literal-array transform).
@@ -104,7 +94,7 @@ object SimilarityQ {
     * every code derived from it; [[IvfFunctions.finiteVec]] twin).
     */
   private def dimStats(emb: DataFrame): DataFrame =
-    emb.filter(graft.functions.IvfFunctions.finiteVec(col("embedding")))
+    emb.filter(IvfFunctions.finiteVec(col("embedding")))
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "x")))
       .groupBy("dim").agg(min("x").as("mn"), max("x").as("mx"))
 
@@ -140,7 +130,7 @@ object SimilarityQ {
     val scored = emb.join(broadcast(queries), col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         fastCosine(col("q_emb"), col("embedding")).as("score"))
-    topKPerQuery(scored)
+    IvfFunctions.topKPerQuery(scored, topK)
   }
 
   /** [[oracleCosine]] over the first `dims` components only. */
@@ -295,7 +285,7 @@ object SimilarityQ {
         col("q_emb"), col("embedding"))
       .dropDuplicates("query_id", "neighbor_id")
       .withColumn("score", fastCosine(col("q_emb"), col("embedding")))
-    topKPerQuery(cand)
+    IvfFunctions.topKPerQuery(cand, topK)
   }.preparedBy(prepareAnnLshKeys)
 
   private[graft] val knnK = 5
@@ -837,7 +827,6 @@ object SimilarityQ {
   private def assignedWithDist(s: org.apache.spark.sql.SparkSession,
                                d: String): DataFrame =
     SharedFrames.frame(s, s"ivf_assigned:$d") {
-      import graft.functions.IvfFunctions
       val emb = Tables.embeddings(s, d)
       val centroids = corpusCentroids(s, d, emb)
       val bc = IvfFunctions.broadcastCentroids(emb, centroids)
@@ -1013,7 +1002,7 @@ object SimilarityQ {
     * IVF fraction constant. Floored at 16 (the correctness-gate SFs:
     * sf0.01 and sf0.1 both resolve to 16, so gate results are
     * unchanged), capped at 65536: past
-    * [[graft.functions.IvfFunctions.singleNodeKCap]] training switches
+    * [[IvfFunctions.singleNodeKCap]] training switches
     * to the distributed Lloyd's loop (assign = broadcast centroids
     * into the scan, update = groupBy(cid) mean), so the SemDeDup paper
     * regime of k=50k trains as DataFrame jobs; the remaining cap only
@@ -1076,7 +1065,6 @@ object SimilarityQ {
   val qAnnIvf: Q = Q.sql(
     "q_ann_ivf",
     ivfAnnOracleSql) { (s, d) =>
-    import graft.functions.IvfFunctions
     val emb = Tables.embeddings(s, d)
     val centroids = corpusCentroids(s, d, emb)
     IvfFunctions.annTopKWith(
@@ -1093,7 +1081,7 @@ object SimilarityQ {
                               emb: DataFrame): Array[Array[Double]] =
     SharedFrames.value(s, s"corpus_centroids:$d") {
       val k = adaptiveK(emb.count())
-      graft.functions.IvfFunctions.trainCentroids(emb, "embedding", k, seed = 42)
+      IvfFunctions.trainCentroids(emb, "embedding", k, seed = 42)
     }
 
   /** Prepare hook family: publish the shared centroid table to a
@@ -1212,7 +1200,7 @@ object SimilarityQ {
       |FROM e JOIN st USING (dim)
       |ORDER BY vec_id ASC, dim ASC""".stripMargin) { (s, d) =>
     val exploded = Tables.embeddings(s, d)
-      .filter(graft.functions.IvfFunctions.finiteVec(col("embedding")))
+      .filter(IvfFunctions.finiteVec(col("embedding")))
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "x")))
     exploded.join(broadcast(dimStats(Tables.embeddings(s, d))), "dim")
       .select(col("vec_id"), col("dim"),
@@ -1294,14 +1282,14 @@ object SimilarityQ {
       val code = floor(least(lit(255.0), (x - mn) * 255.0 / range))
       (mn + (code + 0.5) * range / 255.0).cast(FloatType)
     })
-    val corpus = emb.filter(graft.functions.IvfFunctions.finiteVec(col("embedding")))
+    val corpus = emb.filter(IvfFunctions.finiteVec(col("embedding")))
       .select(col("vec_id"), dequant.as("xhat"))
     val queries = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val scored = corpus.join(broadcast(queries), col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         fastCosine(col("q_emb"), col("xhat")).as("score"))
-    topKPerQuery(scored)
+    IvfFunctions.topKPerQuery(scored, topK)
   }
 
   // -------------------------------------------------------------------
@@ -1329,15 +1317,14 @@ object SimilarityQ {
     */
   def semDedup(emb: DataFrame, k: Int, tau: Double, seed: Long = 42): DataFrame =
     semDedupWith(emb,
-      graft.functions.IvfFunctions.trainCentroids(emb, "embedding", k, seed), tau)
+      IvfFunctions.trainCentroids(emb, "embedding", k, seed), tau)
 
   /** [[semDedup]] with a pre-trained centroid table (see
-    * [[graft.functions.IvfFunctions.annTopKWith]] for why: the catalog
+    * [[IvfFunctions.annTopKWith]] for why: the catalog
     * entry materializes exactly these centroids for the oracle replay).
     */
   def semDedupWith(emb: DataFrame, centroidRows: Array[Array[Double]],
                    tau: Double): DataFrame = {
-    import graft.functions.IvfFunctions
     graft.expressions.CosineSimilarity.ensureRegistered(emb.sparkSession)
     val centroids = IvfFunctions.broadcastCentroids(emb, centroidRows)
     val assigned = emb
@@ -1417,7 +1404,6 @@ object SimilarityQ {
     */
   def semDedupLshWith(emb: DataFrame, centroidRows: Array[Array[Double]],
                       tau: Double, keyed: DataFrame): DataFrame = {
-    import graft.functions.IvfFunctions
     graft.expressions.CosineSimilarity.ensureRegistered(emb.sparkSession)
     val centroids = IvfFunctions.broadcastCentroids(emb, centroidRows)
     val ranked = emb
@@ -1509,7 +1495,7 @@ object SimilarityQ {
   private def pqCodebooks(s: org.apache.spark.sql.SparkSession, d: String,
                           emb: DataFrame): Array[Array[Array[Double]]] =
     SharedFrames.value(s, s"pq_codebooks:$d") {
-      graft.functions.PqFunctions.trainCodebooks(emb, "embedding")
+      PqFunctions.trainCodebooks(emb, "embedding")
     }
 
   /** Materialize (sub, code, c: array<double>, corpus_key) — m×k rows. */
@@ -1594,8 +1580,6 @@ object SimilarityQ {
        |SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, score
        |FROM ranked WHERE rank <= $topK
        |ORDER BY query_id ASC, rank ASC""".stripMargin) { (s, d) =>
-    import graft.functions.PqFunctions
-    graft.expressions.CosineSimilarity.ensureRegistered(s)
     val emb = Tables.embeddings(s, d)
     val cb = pqCodebooks(s, d, emb)
     // memoized checkpoint: one encode pass per session per corpus
@@ -1605,31 +1589,16 @@ object SimilarityQ {
         PqFunctions.encodeUdf(bcCb)(col("embedding")).as("cs"))
         .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
     }
-    val qs = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-    val bcTabs = s.sparkContext.broadcast(
-      qs.map { case (id, v) => id -> PqFunctions.adcTables(v, cb) }.toMap)
+    // the 5 query tables stay a local frame: the cross join's build
+    // side is then provably tiny to the plan lint
     import s.implicits._
-    val queryIds = qs.map(_._1).toSeq.toDF("query_id")
-    val cand = codes.crossJoin(broadcast(queryIds))
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("adc",
-        PqFunctions.adcUdf(bcTabs)(col("query_id"), col("cs")))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("adc").asc, col("vec_id").asc)))
-      .filter(col("crank") <= pqCandidates)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    val vecs = emb.select(col("vec_id"), col("embedding"))
-    val scored = cand
-      .join(vecs.select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
-        Seq("query_id"))
-      .join(vecs.select(col("vec_id").as("neighbor_id"), col("embedding")),
-        Seq("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        fastCosine(col("q_emb"), col("embedding")).as("score"))
-    topKPerQuery(scored)
+    val qTabs = emb.filter(col("vec_id") < nQueries)
+      .select(col("vec_id"), col("embedding")).collect()
+      .map(r => (r.getLong(0),
+        PqFunctions.adcTable(r.getSeq[Float](1).toArray, cb)))
+      .toSeq.toDF("query_id", "adct")
+    PqFunctions.adcRerank(codes.crossJoin(broadcast(qTabs)), emb,
+      pqCandidates, topK)
   }.preparedBy { (s, d) =>
     OracleAux.prepareOnce(s, pqAuxDir, d) {
       val emb = Tables.embeddings(s, d)
@@ -1650,7 +1619,6 @@ object SimilarityQ {
     */
   private def ivfpqResidFrame(s: org.apache.spark.sql.SparkSession,
                               d: String): DataFrame = {
-    import graft.functions.IvfFunctions
     val emb = Tables.embeddings(s, d)
     val bcC = IvfFunctions.broadcastCentroids(emb, corpusCentroids(s, d, emb))
     SharedFrames.frame(s, s"ivfpq_resid:$d") {
@@ -1667,7 +1635,7 @@ object SimilarityQ {
   private def ivfpqCodebooks(s: org.apache.spark.sql.SparkSession,
                              d: String): Array[Array[Array[Double]]] =
     SharedFrames.value(s, s"ivfpq_codebooks:$d") {
-      graft.functions.PqFunctions.trainCodebooks(ivfpqResidFrame(s, d), "r")
+      PqFunctions.trainCodebooks(ivfpqResidFrame(s, d), "r")
     }
 
   /** The shared IVF-PQ oracle: replayed centroids + residual
@@ -1791,11 +1759,8 @@ object SimilarityQ {
   val qAnnIvfPq: Q = Q.sql(
     "q_ann_ivfpq",
     ivfpqAnnOracleSql) { (s, d) =>
-    import graft.functions.{IvfFunctions, PqFunctions}
-    graft.expressions.CosineSimilarity.ensureRegistered(s)
     val emb = Tables.embeddings(s, d)
-    val centroids = corpusCentroids(s, d, emb)
-    val bcC = IvfFunctions.broadcastCentroids(emb, centroids)
+    val bcC = IvfFunctions.broadcastCentroids(emb, corpusCentroids(s, d, emb))
     val resid = ivfpqResidFrame(s, d)
     val cb = ivfpqCodebooks(s, d)
     val bcCb = PqFunctions.broadcastCodebooks(emb, cb)
@@ -1804,43 +1769,12 @@ object SimilarityQ {
         PqFunctions.encodeUdf(bcCb)(col("r")).as("cs"))
         .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
     }
-    val queries = emb.filter(col("vec_id") < nQueries)
-    // probed (query, list) pairs via the SAME probe kernel as q_ann_ivf,
-    // then per-pair ADC tables on the query residual (driver-scale:
-    // nQueries × nProbe entries)
-    val probedPairs = queries.select(col("vec_id").as("query_id"),
-        explode(IvfFunctions.probeUdf(bcC, ivfNProbe)(col("embedding"))).as("cid"))
-      .collect().map(r => (r.getLong(0), r.getInt(1)))
-    val qVecs = queries.select(col("vec_id"), col("embedding")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-    def qResidual(q: Array[Float], cid: Int): Array[Float] = {
-      val c = centroids(cid)
-      Array.tabulate(q.length)(i => (q(i).toDouble - c(i)).toFloat)
-    }
-    val bcTabs = s.sparkContext.broadcast(
-      probedPairs.map { case (qid, cid) =>
-        (qid, cid) -> PqFunctions.adcTables(qResidual(qVecs(qid), cid), cb)
-      }.toMap)
-    import s.implicits._
-    val probedDf = probedPairs.toSeq.toDF("query_id", "cid")
-    val cand = lists.join(broadcast(probedDf), Seq("cid"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("adc",
-        PqFunctions.adcByListUdf(bcTabs)(col("query_id"), col("cid"), col("cs")))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("adc").asc, col("vec_id").asc)))
-      .filter(col("crank") <= pqCandidates)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    val vecs = emb.select(col("vec_id"), col("embedding"))
-    val scored = cand
-      .join(vecs.select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
-        Seq("query_id"))
-      .join(vecs.select(col("vec_id").as("neighbor_id"), col("embedding")),
-        Seq("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        fastCosine(col("q_emb"), col("embedding")).as("score"))
-    topKPerQuery(scored)
+    // the same probe → residual ADC table → join on cid → cut →
+    // rerank core as the materialized index (VectorIndex.searchCoded),
+    // over the in-session code lists
+    PqFunctions.ivfAdcRerank(lists,
+      PqFunctions.probePairs(emb.filter(col("vec_id") < nQueries), bcC, ivfNProbe),
+      emb, bcC, bcCb, pqCandidates, topK, broadcastProbe = true)
   }.preparedBy { (s, d) =>
     prepareCentroids(ivfAuxDir)(s, d)
     OracleAux.prepareOnce(s, ivfpqCbAuxDir, d) {
@@ -1917,7 +1851,7 @@ object SimilarityQ {
     * the batch grows with the data and could never collect to a
     * driver), searched against the same materialized IVF-PQ tables as
     * [[qAnnIvfPqPersistent]]. Executor-side ADC
-    * ([[graft.functions.PqFunctions.adcTableUdf]]) computes each
+    * ([[PqFunctions.adcTableUdf]]) computes each
     * (query, probed-list) table inside the scan from the broadcast
     * kernels; `broadcastProbe = false` leaves the candidate join
     * unhinted, so a genuinely large probe side shuffles TO the index's
@@ -2234,7 +2168,7 @@ object SimilarityQ {
     // same index domain as q_emb_quantize (dimStats filters the same
     // way; a NaN/Inf vector has no code and belongs to no class here)
     val emb = Tables.embeddings(s, d)
-      .filter(graft.functions.IvfFunctions.finiteVec(col("embedding")))
+      .filter(IvfFunctions.finiteVec(col("embedding")))
     val codes = emb
       .select(col("vec_id"), col("label"),
         posexplode(col("embedding")).as(Seq("dim", "x")))
@@ -2549,7 +2483,6 @@ object SimilarityQ {
        |LEFT JOIN hits h ON h.nprobe = ps.nprobe
        |LEFT JOIN scans sc ON sc.nprobe = ps.nprobe
        |ORDER BY nprobe ASC""".stripMargin) { (s, d) =>
-    import graft.functions.IvfFunctions
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val centroids = IvfFunctions.broadcastCentroids(emb, corpusCentroids(s, d, emb))

@@ -50,12 +50,7 @@ object VectorIndex {
             buckets: Int = 8): Unit = {
     val s = emb.sparkSession
     BandIndex.clearOrphanedLocation(s, table)
-    val bc = IvfFunctions.broadcastCentroids(emb, centroids)
-    emb.select(IvfFunctions.assignUdf(bc)(col("embedding")).as("cid"),
-        col("vec_id"), col("embedding"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "cid").sortBy("cid")
-      .saveAsTable(table)
+    writeLists(assignLists(emb, centroids), "overwrite", buckets, table)
     writeCentroids(s, table, centroids)
     writeSignature(s, table, corpusSignature(emb))
   }
@@ -128,15 +123,7 @@ object VectorIndex {
                  buckets: Int = 8): Unit = {
     val s = emb.sparkSession
     BandIndex.clearOrphanedLocation(s, table)
-    val bcC = IvfFunctions.broadcastCentroids(emb, centroids)
-    val bcCb = PqFunctions.broadcastCodebooks(emb, codebooks)
-    emb.withColumn("cid", IvfFunctions.assignUdf(bcC)(col("embedding")))
-      .withColumn("r", IvfFunctions.residualUdf(bcC)(col("embedding"), col("cid")))
-      .select(col("cid"), col("vec_id"),
-        PqFunctions.encodeUdf(bcCb)(col("r")).as("cs"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "cid").sortBy("cid")
-      .saveAsTable(table)
+    writeLists(codedLists(emb, centroids, codebooks), "overwrite", buckets, table)
     writeCentroids(s, table, centroids)
     writeSignature(s, table, corpusSignature(emb))
     BandIndex.clearOrphanedLocation(s, s"${table}_codebooks")
@@ -260,10 +247,10 @@ object VectorIndex {
     * index — no training, no corpus assignment: centroids load from
     * the k-row table, each query probes its nProbe nearest lists, and
     * the scan reads ONLY the probed buckets (the collected probe-cid
-    * set is bounded by |queries| × nProbe — the fixed-query-set
-    * driver reduction already used by the PQ path). Self-matches are
-    * excluded and candidates exact-rerank, identical to the
-    * in-session IVF contract.
+    * set is the distinct probed lists, ≤ k ints — the same bounded
+    * reduction [[searchCoded]] makes). Self-matches are excluded and
+    * candidates exact-rerank, identical to the in-session IVF
+    * contract.
     */
   def search(spark: SparkSession, table: String, queries: DataFrame,
              nProbe: Int, topK: Int): DataFrame = {
@@ -282,7 +269,8 @@ object VectorIndex {
   /** ANN top-k against a CODED index ([[buildCoded]]): centroids and
     * codebooks load from their k-row/m×16-row tables and broadcast;
     * each query's per-probed-list ADC table computes ON EXECUTORS
-    * ([[PqFunctions.adcTableUdf]]) — the query batch itself NEVER
+    * ([[PqFunctions.ivfAdcRerank]], the core the in-session q_ann_ivfpq
+    * path runs too) — the query batch itself NEVER
     * collects to the driver (r13 verdict #2), so a corpus-sized batch
     * (kNN-graph-over-index, the retrieval shape a 100 TB deployment
     * runs) streams through exactly like a 5-query one. The coded lists
@@ -306,56 +294,22 @@ object VectorIndex {
   def searchCoded(spark: SparkSession, table: String, queries: DataFrame,
                   corpusVecs: DataFrame, nProbe: Int, pqCandidates: Int,
                   topK: Int, broadcastProbe: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    graft.expressions.CosineSimilarity.ensureRegistered(spark)
-    val centroids = loadCentroids(spark, table)
-    val cb = loadCodebooks(spark, table)
-    val bcC = IvfFunctions.broadcastCentroids(queries, centroids)
-    val bcCb = PqFunctions.broadcastCodebooks(queries, cb)
+    val bcC = IvfFunctions.broadcastCentroids(queries, loadCentroids(spark, table))
+    val bcCb = PqFunctions.broadcastCodebooks(queries, loadCodebooks(spark, table))
     // the probe pass (k-centroid distances per query) runs ONCE and
     // materializes its (query_id, embedding, cid) pairs — both the
-    // ADC join side and the bucket-prune cid set derive from it; the
-    // pre-r14 shape evaluated probeUdf a second, independent time just
-    // for the distinct-cid collect, an extra full k-distance pass over
-    // a corpus-scaled batch
-    val probePairs = queries
-      .select(col("vec_id").as("query_id"), col("embedding"),
-        explode(IvfFunctions.probeUdf(bcC, nProbe)(col("embedding"))).as("cid"))
+    // ADC join side and the bucket-prune cid set derive from it
+    val probePairs = PqFunctions.probePairs(queries, bcC, nProbe)
       .localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val probed = probePairs
-      .select(col("query_id"), col("cid"),
-        PqFunctions.adcTableUdf(bcC, bcCb)(col("embedding"), col("cid")).as("adct"))
     // bounded reduction (≤ k ints): the distinct probed lists, for the
     // `cid IN (...)` bucket prune at the index scan
     val probedCids = probePairs.select(col("cid"))
       .distinct().collect().map(_.getInt(0)).sorted
     val lists = maskTombstones(spark, table,
       spark.table(table).filter(col("cid").isin(probedCids.map(Int.box): _*)))
-    val probeSide = if (broadcastProbe) broadcast(probed) else probed
-    val cand = lists.join(probeSide, Seq("cid"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("adc", PqFunctions.adcFlatUdf(col("adct"), col("cs")))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("adc").asc, col("vec_id").asc)))
-      .filter(col("crank") <= pqCandidates)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    val vecs = corpusVecs.select(col("vec_id"), col("embedding"))
-    cand
-      .join(vecs.select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
-        Seq("query_id"))
-      .join(vecs.select(col("vec_id").as("neighbor_id"), col("embedding")),
-        Seq("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        graft.functions.VectorFunctions.fastCosine(col("q_emb"), col("embedding"))
-          .as("score"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("score").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= topK)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("score"))
-      .orderBy(col("query_id").asc, col("rank").asc)
+    PqFunctions.ivfAdcRerank(lists, probePairs, corpusVecs, bcC, bcCb,
+      pqCandidates, topK, broadcastProbe)
   }
 
   /** Record a new batch: assign against the EXISTING centroids and
@@ -365,13 +319,7 @@ object VectorIndex {
     */
   def append(spark: SparkSession, table: String, emb: DataFrame,
              buckets: Int = 8): Unit = {
-    val centroids = loadCentroids(spark, table)
-    val bc = IvfFunctions.broadcastCentroids(emb, centroids)
-    emb.select(IvfFunctions.assignUdf(bc)(col("embedding")).as("cid"),
-        col("vec_id"), col("embedding"))
-      .write.mode("append")
-      .bucketBy(buckets, "cid").sortBy("cid")
-      .saveAsTable(table)
+    writeLists(assignLists(emb, loadCentroids(spark, table)), "append", buckets, table)
   }
 
   /** RESTART-IDEMPOTENT [[appendCoded]] — the foreachBatch tail of the
@@ -393,13 +341,8 @@ object VectorIndex {
     */
   def appendCodedIdempotent(spark: SparkSession, table: String,
                             emb: DataFrame, buckets: Int = 8): Unit = {
-    val bcC = IvfFunctions.broadcastCentroids(emb, loadCentroids(spark, table))
-    val bcCb = PqFunctions.broadcastCodebooks(emb, loadCodebooks(spark, table))
-    val coded = emb
-      .withColumn("cid", IvfFunctions.assignUdf(bcC)(col("embedding")))
-      .withColumn("r", IvfFunctions.residualUdf(bcC)(col("embedding"), col("cid")))
-      .select(col("cid"), col("vec_id"),
-        PqFunctions.encodeUdf(bcCb)(col("r")).as("cs"))
+    val coded = codedLists(emb, loadCentroids(spark, table),
+        loadCodebooks(spark, table))
       .localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     try {
@@ -413,11 +356,8 @@ object VectorIndex {
         // physically re-add a vector deleted (and possibly compacted
         // away) while the stream was down — the retained mask would
         // hide it from search either way, but garbage rows are garbage
-        maskTombstones(spark, table,
-            coded.join(existing, Seq("vec_id"), "left_anti"))
-          .write.mode("append")
-          .bucketBy(buckets, "cid").sortBy("cid")
-          .saveAsTable(table)
+        writeLists(maskTombstones(spark, table,
+          coded.join(existing, Seq("vec_id"), "left_anti")), "append", buckets, table)
       }
     } finally coded.unpersist()
   }
@@ -429,14 +369,37 @@ object VectorIndex {
     */
   def appendCoded(spark: SparkSession, table: String, emb: DataFrame,
                   buckets: Int = 8): Unit = {
-    val bcC = IvfFunctions.broadcastCentroids(emb, loadCentroids(spark, table))
-    val bcCb = PqFunctions.broadcastCodebooks(emb, loadCodebooks(spark, table))
+    writeLists(codedLists(emb, loadCentroids(spark, table),
+      loadCodebooks(spark, table)), "append", buckets, table)
+  }
+
+  /** (cid, vec_id, embedding): `emb` assigned to fixed centroids. */
+  private def assignLists(emb: DataFrame,
+                          centroids: Array[Array[Double]]): DataFrame = {
+    val bc = IvfFunctions.broadcastCentroids(emb, centroids)
+    emb.select(IvfFunctions.assignUdf(bc)(col("embedding")).as("cid"),
+      col("vec_id"), col("embedding"))
+  }
+
+  /** (cid, vec_id, cs): `emb` assigned, float-residualized and
+    * PQ-encoded against fixed quantizers — the coded-list row every
+    * coded build and append writes, with the in-session q_ann_ivfpq
+    * kernels.
+    */
+  private def codedLists(emb: DataFrame, centroids: Array[Array[Double]],
+                         codebooks: Array[Array[Array[Double]]]): DataFrame = {
+    val bcC = IvfFunctions.broadcastCentroids(emb, centroids)
+    val bcCb = PqFunctions.broadcastCodebooks(emb, codebooks)
     emb.withColumn("cid", IvfFunctions.assignUdf(bcC)(col("embedding")))
       .withColumn("r", IvfFunctions.residualUdf(bcC)(col("embedding"), col("cid")))
       .select(col("cid"), col("vec_id"),
         PqFunctions.encodeUdf(bcCb)(col("r")).as("cs"))
-      .write.mode("append")
+  }
+
+  /** Write inverted lists bucketed (and sorted) by cid. */
+  private def writeLists(lists: DataFrame, mode: String, buckets: Int,
+                         table: String): Unit =
+    lists.write.mode(mode)
       .bucketBy(buckets, "cid").sortBy("cid")
       .saveAsTable(table)
-  }
 }

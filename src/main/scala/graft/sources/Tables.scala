@@ -40,10 +40,15 @@ object Tables {
     * Memory bounds (r15, the r14 ADVICE items): the memo keys on
     * (session, path) with the signature stored in the VALUE, so a
     * superseded signature is evicted by the insert that replaces it, and
-    * entries whose session has been stopped (the 140-suite test JVM,
-    * newSession A/B probes) are swept on every load — driver memory is
-    * bounded by live sessions x live tables instead of growing for the
-    * JVM lifetime.
+    * entries whose SparkContext has been stopped (the 140-suite test
+    * JVM) are swept on every load — driver memory is bounded by live
+    * contexts x live tables instead of growing for the JVM lifetime.
+    * A child session from `newSession()` shares its parent's
+    * SparkContext, so its entries are freed only when that shared
+    * SparkContext stops (only test harnesses create child sessions).
+    * Weak keys would not free them sooner: every memoized DataFrame
+    * holds its SparkSession strongly, so the value would pin its own
+    * key.
     */
   private val relationMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, DataFrame)]()

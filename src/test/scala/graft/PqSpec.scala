@@ -43,16 +43,17 @@ class PqSpec extends SparkSpecBase {
         Array.tabulate(PqFunctions.subDim)(d => (j + i + d) * 0.1))
     }
     val q = Array.tabulate(64)(d => 0.05f * d)
-    val tabs = PqFunctions.adcTables(q, cb)
-    // spot-check one entry against a direct computation
+    val tabs = PqFunctions.adcTable(q, cb)
+    // spot-check one entry of the flattened [j * 16 + code] table
+    // against a direct computation
     val j = 3; val i = 7
     var expect = 0.0
     for (d <- 0 until 8) {
       val diff = q(j * 8 + d) - cb(j)(i)(d)
       expect += diff * diff
     }
-    assert(tabs(j)(i) == expect)
-    assert(tabs.length == 8 && tabs.forall(_.length == 16))
+    assert(tabs(j * PqFunctions.codesPerSubspace + i) == expect)
+    assert(tabs.length == 8 * 16)
   }
 
   test("q_ann_pq recall@10 vs q_ann_bruteforce (codes-only candidates + exact rerank)") {
