@@ -14,6 +14,10 @@ import org.apache.spark.sql.SparkSession
   *   - nanosAsLong: the events table is nanosecond-precision parquet,
   *     which the vectorized reader otherwise rejects. Set here at
   *     session build rather than mutated mid-read by a loader.
+  *
+  * A session built outside `Sessions` needs
+  * `spark.sql.extensions=graft.expressions.GraftExtensions` for the
+  * native SQL functions and planner rules.
   */
 object Sessions {
   def builder(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession.Builder =

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -70,6 +69,4 @@ case class BpeTokenCount(left: Expression, right: Expression)
 object BpeTokenCount {
   val fn: NativeFn = NativeFn("bpe_token_count", classOf[BpeTokenCount], 2,
     c => BpeTokenCount(c(0), c(1)))
-
-  def ensureRegistered(spark: SparkSession): Unit = fn.ensure(spark)
 }

@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -115,22 +113,18 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 /** Registration for `fast_cosine` — injected session-wide through
-  * [[org.apache.spark.sql.SparkSessionExtensions]] (Sessions.builder)
-  * and also registrable imperatively for externally-built sessions.
+  * [[org.apache.spark.sql.SparkSessionExtensions]] (Sessions.builder).
   */
 object CosineSimilarity {
 
   val fn: NativeFn = NativeFn("fast_cosine", classOf[CosineSimilarity], 2,
     c => CosineSimilarity(c.head, c(1)))
-
-  def ensureRegistered(spark: SparkSession): Unit = fn.ensure(spark)
 }
 
 /** SparkSessionExtensions hook: `.withExtensions(new GraftExtensions)`. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    // every native expression, so extension-built sessions need no
-    // imperative ensureRegistered calls
+    // every native expression; newSession() children inherit them
     Seq(CosineSimilarity.fn, LshBandKeys.fn, MinhashSig.fn, Simhash64.fn,
       DeflateSize.fn, BpeTokenCount.fn, MortonInterleave.fn, HilbertIndex.fn,
       VecAllFinite.fn)

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -75,6 +74,4 @@ object DeflateSize {
 
   val fn: NativeFn = NativeFn("deflate_size", classOf[DeflateSize], 1,
     c => DeflateSize(c.head))
-
-  def ensureRegistered(spark: SparkSession): Unit = fn.ensure(spark)
 }

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -84,6 +83,4 @@ object HilbertIndex {
 
   val fn: NativeFn = NativeFn("hilbert_index", classOf[HilbertIndex], 2,
     c => HilbertIndex(c(0), c(1)))
-
-  def ensureRegistered(spark: SparkSession): Unit = fn.ensure(spark)
 }

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
@@ -160,6 +159,4 @@ object LshBandKeys {
 
   val fn: NativeFn = NativeFn("lsh_band_keys", classOf[LshBandKeys], 3,
     c => LshBandKeys(c.head, c(1), c(2)))
-
-  def ensureRegistered(spark: SparkSession): Unit = fn.ensure(spark)
 }

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -91,6 +90,4 @@ object MinhashSig {
 
   val fn: NativeFn = NativeFn("minhash_sig", classOf[MinhashSig], 1,
     c => MinhashSig(c.head))
-
-  def ensureRegistered(spark: SparkSession): Unit = fn.ensure(spark)
 }

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -64,6 +63,4 @@ object MortonInterleave {
 
   val fn: NativeFn = NativeFn("morton_interleave", classOf[MortonInterleave], 2,
     c => MortonInterleave(c(0), c(1)))
-
-  def ensureRegistered(spark: SparkSession): Unit = fn.ensure(spark)
 }

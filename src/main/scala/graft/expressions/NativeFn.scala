@@ -1,14 +1,12 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** One registration record per native expression — the single
   * implementation of the identifier/info/arity-checked-builder
-  * boilerplate every expression object was copy-pasting, usable both
-  * by the SparkSessionExtensions hook (GraftExtensions) and by
-  * per-session `ensureRegistered` calls.
+  * boilerplate every expression object was copy-pasting, injected by
+  * the SparkSessionExtensions hook ([[GraftExtensions]]).
   */
 private[graft] final case class NativeFn(
     name: String,
@@ -26,13 +24,4 @@ private[graft] final case class NativeFn(
   /** Tuple shape SparkSessionExtensions.injectFunction expects. */
   def injectable: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
     (identifier, info, builder)
-
-  /** Idempotent per-session registration (for sessions not built via
-    * the extensions hook).
-    */
-  def ensure(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(identifier))
-      registry.registerFunction(identifier, info, builder)
-  }
 }

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -78,6 +77,4 @@ object Simhash64 {
 
   val fn: NativeFn = NativeFn("simhash64", classOf[Simhash64], 1,
     c => Simhash64(c.head))
-
-  def ensureRegistered(spark: SparkSession): Unit = fn.ensure(spark)
 }

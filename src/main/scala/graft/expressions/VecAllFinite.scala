@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -76,6 +75,4 @@ case class VecAllFinite(child: Expression) extends UnaryExpression {
 object VecAllFinite {
   val fn: NativeFn = NativeFn("vec_all_finite", classOf[VecAllFinite], 1,
     c => VecAllFinite(c.head))
-
-  def ensureRegistered(spark: SparkSession): Unit = fn.ensure(spark)
 }

@@ -306,9 +306,9 @@ object IvfFunctions {
   }
 
   // ---------------------------------------------------------------
-  // The quantizer kernels. Every IVF, PQ and hierarchical-IVF UDF is a
-  // thin wrapper over these, and the oracle replays each of them in
-  // SQL: keep their operand order and tie-breaks fixed.
+  // The quantizer kernels. Every IVF and PQ UDF is a thin wrapper
+  // over these, and the oracle replays each of them in SQL: keep
+  // their operand order and tie-breaks fixed.
   // ---------------------------------------------------------------
 
   /** Squared L2 from `v` starting at `off` to `c`: a sequential double
@@ -427,12 +427,11 @@ object IvfFunctions {
 
   /** Candidate equi-join + exact-cosine rerank over any inverted-list
     * table (vec_id, embedding, cid) and probe table (query_id, q_emb,
-    * cid) — the tail shared by the flat and hierarchical IVF paths
-    * (the only difference between them is how `cid` is produced).
+    * cid) — the tail shared by the in-session and persistent IVF
+    * searches.
     */
   private[graft] def rerankProbed(lists: DataFrame, probed: DataFrame,
                                       topK: Int): DataFrame = {
-    graft.expressions.CosineSimilarity.ensureRegistered(lists.sparkSession)
     topKPerQuery(lists.join(broadcast(probed), Seq("cid"))
       .filter(col("query_id") =!= col("vec_id"))
       .dropDuplicates("query_id", "vec_id")

@@ -152,7 +152,6 @@ object PqFunctions {
     */
   def adcRerank(pairs: DataFrame, corpusVecs: DataFrame,
                 pqCandidates: Int, topK: Int): DataFrame = {
-    graft.expressions.CosineSimilarity.ensureRegistered(pairs.sparkSession)
     val cand = pairs
       .filter(col("query_id") =!= col("vec_id"))
       .withColumn("adc", adcFlatUdf(col("adct"), col("cs")))

@@ -126,9 +126,8 @@ object TextFunctions {
 
   /** Native codegen form of [[minhashSig]] (graft.expressions.MinhashSig):
     * same signature math, no per-row boxing, stays inside
-    * WholeStageCodegen. Caller must have run
-    * MinhashSig.ensureRegistered(spark) (Sessions.local does via
-    * GraftFunctions.registerAll).
+    * WholeStageCodegen. Resolves in any session built by
+    * [[graft.Sessions]] (GraftExtensions injects it).
     */
   def fastMinhashSig(shingles: Column): Column =
     call_function("minhash_sig", shingles)
@@ -253,7 +252,4 @@ object TextFunctions {
       }
     }
   }
-
-  /** Single 64-bit document fingerprint (min winnowed hash). */
-  def docFingerprint(fps: Column): Column = array_min(fps)
 }

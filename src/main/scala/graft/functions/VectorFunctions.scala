@@ -33,9 +33,8 @@ object VectorFunctions {
 
   /** The codegen'd native form (graft.expressions.CosineSimilarity) —
     * bit-identical to [[cosine]] (same sequential-sum order), ~no
-    * per-element allocation. Callers must ensure the function is
-    * registered ([[graft.expressions.CosineSimilarity.ensureRegistered]];
-    * Sessions.builder sessions always have it).
+    * per-element allocation. Resolves in any session built by
+    * [[graft.Sessions]] (GraftExtensions injects it).
     */
   def fastCosine(a: Column, b: Column): Column =
     call_function("fast_cosine", a, b)
@@ -94,9 +93,9 @@ object VectorFunctions {
   /** Codegen'd native band keys (graft.expressions.LshBandKeys) —
     * bit-identical to [[lshBandKeys]] (same seed-7 planes, widening,
     * sign convention; pinned by LshBandKeysFastSpec), no per-element
-    * boxing. The production candidate-generation path. Callers must
-    * ensure registration (LshBandKeys.ensureRegistered; Sessions
-    * sessions always have it).
+    * boxing. The production candidate-generation path. Resolves in
+    * any session built by [[graft.Sessions]] (GraftExtensions injects
+    * it).
     */
   def fastLshBandKeys(v: Column, bands: Int = lshBands,
                       rowsPerBand: Int = lshRowsPerBand): Column = {

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.expressions.BpeTokenCount
 import graft.functions.Bpe
 import graft.functions.TextFunctions.tokens
 import graft.sources.Tables
@@ -114,7 +113,6 @@ object BpeQ {
   private def prepareBpe(s: org.apache.spark.sql.SparkSession,
                          d: String): Unit =
     OracleAux.prepareOnce(s, auxDir, d) {
-      BpeTokenCount.ensureRegistered(s)
       val docs = Tables.documents(s, d)
       writeWordTokens(docs, sharedMerges(s, d, docs))
     }
@@ -126,7 +124,6 @@ object BpeQ {
        |SELECT d.doc_id, bt.n_words, bt.n_tokens_bpe
        |FROM documents d LEFT JOIN bt USING (doc_id)
        |ORDER BY doc_id ASC""".stripMargin) { (s, d) =>
-    BpeTokenCount.ensureRegistered(s)
     val docs = Tables.documents(s, d)
     val merges = sharedMerges(s, d, docs)
     docs.select(col("doc_id"),
@@ -149,7 +146,6 @@ object BpeQ {
        |    / ${PipelineQ.shardTokenBudget}.0) AS BIGINT) AS shard_id
        |FROM documents d LEFT JOIN bt USING (doc_id)
        |ORDER BY doc_id ASC""".stripMargin) { (s, d) =>
-    BpeTokenCount.ensureRegistered(s)
     val docs = Tables.documents(s, d)
     val merges = sharedMerges(s, d, docs)
     PipelineQ.packIntoShards(
@@ -188,7 +184,6 @@ object BpeQ {
        |FROM l LEFT JOIN bt USING (doc_id)
        |GROUP BY l.lang
        |ORDER BY lang ASC NULLS FIRST""".stripMargin) { (s, d) =>
-    BpeTokenCount.ensureRegistered(s)
     val docs = Tables.documents(s, d)
     val merges = sharedMerges(s, d, docs)
     docs.select(col("lang"),

@@ -47,8 +47,8 @@ object EventsQ {
     // the guard references its input in both the condition and the
     // branch, and codegen does not CSE the conditional duplicate — an
     // inline get_json_object was measured evaluating twice (+99% at
-    // sf10, GuardCostProbeMain: bare 1.25 s, inline guard 2.49 s,
-    // pre-projected guard 1.30 s on 10M rows); CollapseProject keeps
+    // sf10: bare 1.25 s, inline guard 2.49 s, pre-projected guard
+    // 1.30 s on 10M rows; BENCH_NOTES.md, round 15); CollapseProject keeps
     // the non-cheap alias un-inlined, so it runs once here.
     Tables.events(s, d)
       .withColumn("__k", get_json_object(col("props"), "$.k"))

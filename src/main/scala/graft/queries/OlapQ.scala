@@ -454,8 +454,6 @@ object OlapQ {
     // limits; as one expression it is a static call that recomputes
     // for free, so the corpus is scanned twice (counts, rank) and
     // never materialized.
-    graft.expressions.MortonInterleave.ensureRegistered(s)
-    graft.expressions.HilbertIndex.ensureRegistered(s)
     val keyFn = if (hilbert) "hilbert_index" else "morton_interleave"
     val b = base.agg(min("p"), max("p"), min("day"), max("day")).head()
     val (pmin, pmax, dmin, dmax) =

@@ -123,7 +123,6 @@ object SimilarityQ {
        |SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, score
        |FROM ranked WHERE rank <= $topK
        |ORDER BY query_id ASC, rank ASC""".stripMargin) { (s, d) =>
-    graft.expressions.CosineSimilarity.ensureRegistered(s)
     val emb = Tables.embeddings(s, d)
     val queries = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
@@ -189,7 +188,6 @@ object SimilarityQ {
        |  (t1.trunc_top1 = f1.full_top1) AS agree
        |FROM f1 JOIN t1 ON f1.query_id = t1.query_id
        |ORDER BY f1.query_id ASC""".stripMargin) { (s, d) =>
-    graft.expressions.CosineSimilarity.ensureRegistered(s)
     val emb = Tables.embeddings(s, d)
     val queries = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
@@ -226,8 +224,6 @@ object SimilarityQ {
     * PURE (the oracle-replay publish is [[prepareAnnLshKeys]]).
     */
   private def annLshKeyedFrame(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.CosineSimilarity.ensureRegistered(s)
-    graft.expressions.LshBandKeys.ensureRegistered(s)
     SharedFrames.frame(s, s"ann_lsh_keys:$d") {
       Tables.embeddings(s, d)
         .withColumn("bk", explode(fastLshBandKeys(col("embedding"))))
@@ -761,7 +757,6 @@ object SimilarityQ {
        |SELECT vec_id, bench_id, cos_sim
        |FROM hits WHERE rn = 1
        |ORDER BY vec_id ASC""".stripMargin) { (s, d) =>
-    graft.expressions.CosineSimilarity.ensureRegistered(s)
     val emb = Tables.embeddings(s, d)
     val bench = emb.filter(col("vec_id") < embDecontamBench)
       .select(col("vec_id").as("bench_id"), col("embedding").as("b_emb"))
@@ -914,7 +909,6 @@ object SimilarityQ {
     */
   private def neardupBandKeys(s: org.apache.spark.sql.SparkSession,
                               d: String): DataFrame = {
-    graft.expressions.LshBandKeys.ensureRegistered(s)
     SharedFrames.frame(s, s"neardup_lsh_keys:$d") {
       Tables.embeddings(s, d).select(col("vec_id"),
         explode(fastLshBandKeys(col("embedding"), bands = 8, rowsPerBand = 8)).as("bk"))
@@ -947,8 +941,6 @@ object SimilarityQ {
     */
   def embeddingNearDupLshFromKeys(keyed: DataFrame, emb: DataFrame,
                                   threshold: Double): DataFrame = {
-    graft.expressions.CosineSimilarity.ensureRegistered(emb.sparkSession)
-    graft.expressions.LshBandKeys.ensureRegistered(emb.sparkSession)
     // near-dup banding: 8 bands × 8 planes — high-cosine pairs still
     // collide w.h.p. while random pairs land in 1-of-256 buckets/band
     val anchors = keyed.filter(col("vec_id") % 20 === 0)
@@ -985,7 +977,6 @@ object SimilarityQ {
     * small-SF/spec use only).
     */
   def embeddingNearDupExact(emb: DataFrame, threshold: Double): DataFrame = {
-    graft.expressions.CosineSimilarity.ensureRegistered(emb.sparkSession)
     val anchors = emb.filter(col("vec_id") % 20 === 0)
       .select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
     emb.join(broadcast(anchors), col("vec_a") < col("vec_id"))
@@ -1136,7 +1127,7 @@ object SimilarityQ {
   /** PERSISTENT-INDEX ANN — the deployment shape of [[qAnnIvf]]: the
     * coarse quantizer and the cid-bucketed inverted lists are
     * MATERIALIZED warehouse tables ([[graft.sink.VectorIndex]], the
-    * embedding twin of the text side's HashIndex/BandIndex), and this
+    * embedding twin of the text side's BandIndex), and this
     * query is the SEARCH path: load the k-row centroid table, probe,
     * read ONLY the probed buckets (cid IN (…) → bucket pruning at the
     * scan; the index side never shuffles), exact-rerank. No k-means,
@@ -1267,7 +1258,6 @@ object SimilarityQ {
        |SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, score
        |FROM ranked WHERE rank <= $topK
        |ORDER BY query_id ASC, rank ASC""".stripMargin) { (s, d) =>
-    graft.expressions.CosineSimilarity.ensureRegistered(s)
     val emb = Tables.embeddings(s, d)
     val stats = dimStats(emb)
       .collect().map(r => (r.getInt(0), r.getFloat(1), r.getFloat(2)))
@@ -1325,7 +1315,6 @@ object SimilarityQ {
     */
   def semDedupWith(emb: DataFrame, centroidRows: Array[Array[Double]],
                    tau: Double): DataFrame = {
-    graft.expressions.CosineSimilarity.ensureRegistered(emb.sparkSession)
     val centroids = IvfFunctions.broadcastCentroids(emb, centroidRows)
     val assigned = emb
       .withColumn("__a", IvfFunctions.assignWithDistUdf(centroids)(col("embedding")))
@@ -1404,7 +1393,6 @@ object SimilarityQ {
     */
   def semDedupLshWith(emb: DataFrame, centroidRows: Array[Array[Double]],
                       tau: Double, keyed: DataFrame): DataFrame = {
-    graft.expressions.CosineSimilarity.ensureRegistered(emb.sparkSession)
     val centroids = IvfFunctions.broadcastCentroids(emb, centroidRows)
     val ranked = emb
       .withColumn("__a", IvfFunctions.assignWithDistUdf(centroids)(col("embedding")))

@@ -481,7 +481,6 @@ object TextQ {
   private def deflateFrame(s: org.apache.spark.sql.SparkSession,
                            d: String): DataFrame =
     SharedFrames.frame(s, s"doc_deflate:$d") {
-      graft.expressions.DeflateSize.ensureRegistered(s)
       Tables.documents(s, d)
         .select(col("doc_id"),
           octet_length(col("text")).cast(LongType).as("byte_len"),
@@ -728,7 +727,6 @@ object TextQ {
     */
   private[graft] def minhashBandedFrame(s: org.apache.spark.sql.SparkSession,
                                  d: String): DataFrame = {
-    graft.expressions.MinhashSig.ensureRegistered(s)
     val rowsPerBand = minhashK / minhashBands
     SharedFrames.frame(s, s"minhash_bands:$d") {
       minhashShingles(s, d)
@@ -811,7 +809,6 @@ object TextQ {
     */
   private def simhashSigFrame(s: org.apache.spark.sql.SparkSession,
                               d: String): DataFrame = {
-    graft.expressions.Simhash64.ensureRegistered(s)
     SharedFrames.frame(s, s"simhash_sig:$d") {
       Tables.documents(s, d)
         .select(col("doc_id"), fastSimhash64(tokens(col("text"))).as("sim"))
@@ -949,8 +946,8 @@ object TextQ {
   private[graft] val fingerprintAuxDir = s"${OracleAux.root}/doc_fingerprints"
 
   /** Winnowed rolling-hash fingerprint summary per document: the
-    * MOSS-style signature set's minimum (`docFingerprint` = min over
-    * the set — identical on the raw or distinct fingerprint list) and
+    * MOSS-style signature set's minimum (min over the set — identical
+    * on the raw or distinct fingerprint list) and
     * its distinct-set size.
     *
     * ORACLE REPLAY (flipped from rows-only in round 6): the seeded
@@ -2719,7 +2716,6 @@ object TextQ {
     */
   private def minhashSigExploded(s: org.apache.spark.sql.SparkSession,
                                  d: String): DataFrame = {
-    graft.expressions.MinhashSig.ensureRegistered(s)
     SharedFrames.frame(s, s"minhash_sig_exploded:$d") {
       minhashShingles(s, d)
         .select(col("doc_id"),

@@ -3,11 +3,11 @@ package graft.sink
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Persistent corpus MinHash band-key index — the NEAR-dup sibling of
-  * [[HashIndex]]: "find everything in a new crawl dump that is a
-  * near-duplicate of anything ever kept" without touching corpus
-  * text. The index holds (band, bh, doc_id) band keys (a few dozen
-  * bytes per kept document) BUCKETED by (band, bh) at write time, so
+/** Persistent corpus MinHash band-key index: "find everything in a
+  * new crawl dump that is a near-duplicate of anything ever kept"
+  * without touching corpus text. The index holds (band, bh, doc_id)
+  * band keys (a few dozen bytes per kept document) BUCKETED by
+  * (band, bh) at write time, so
   * the batch-vs-corpus candidate join satisfies the index side's
   * distribution from the files on disk: only the (small) incoming
   * batch's band table shuffles; the (huge) index reads in place,
@@ -26,7 +26,7 @@ object BandIndex {
     * warehouse dir) but the directory survived — blocks CREATE TABLE
     * with LOCATION_ALREADY_EXISTS. A (re)build must not be blocked by
     * a dead run's debris, so clear it when the catalog doesn't know
-    * the table. Shared with [[HashIndex]].
+    * the table. Shared with [[VectorIndex]] and [[Compactor]].
     */
   private[graft] def clearOrphanedLocation(spark: SparkSession, table: String): Unit =
     if (!spark.catalog.tableExists(table)) {

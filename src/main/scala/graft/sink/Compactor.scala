@@ -65,8 +65,8 @@ object Compactor {
     * zero-Exchange bucketed joins never re-hash the rows. A naive
     * `read.parquet(...).repartition(n)` rewrite scrambles rows across
     * files while the table keeps CLAIMING its bucket spec: silently
-    * wrong candidate sets from every index built this way (HashIndex,
-    * BandIndex, VectorIndex inverted lists). Those tables compact via
+    * wrong candidate sets from every index built this way (BandIndex,
+    * VectorIndex inverted lists). Those tables compact via
     * [[VectorIndex.compact]]-style bucket-preserving rebuilds that
     * re-write through `bucketBy(...)` — never through this raw-file
     * path, so the check fails loudly instead of corrupting.
@@ -119,8 +119,8 @@ object Compactor {
   /** Bucket-PRESERVING compaction for a bucketed catalog table — the
     * legal path [[refuseBucketed]] points at. Each append to a
     * bucketed table lays down its own file set per bucket (N appends ⇒
-    * N×buckets files, unbounded: VectorIndex/HashIndex/BandIndex all
-    * grow this way), and the raw-directory path above must never touch
+    * N×buckets files, unbounded: VectorIndex and BandIndex both grow
+    * this way), and the raw-directory path above must never touch
     * them. This rebuild re-writes the rows THROUGH the table's own
     * catalog bucket spec (same columns, same numBuckets, same sort)
     * into a staging table, pre-shuffled so each task holds exactly one

@@ -358,7 +358,6 @@ object StreamingDocs {
     */
   def neardupGateStream(docs: DataFrame, indexTable: String): DataFrame = {
     val s = docs.sparkSession
-    graft.expressions.MinhashSig.ensureRegistered(s)
     val bands = TextQ.minhashBands
     val rpb = TextFunctions.minhashK / bands
     val sig = TextFunctions.fastMinhashSig(

@@ -69,7 +69,7 @@ object Ops {
     * expression). An expensive input — get_json_object, a regex
     * extract — must be pre-projected into its own column first
     * (q_events_json_props pattern; measured +99% at sf10 inline,
-    * GuardCostProbeMain).
+    * BENCH_NOTES.md, round 15).
     */
   def coerceNumeric(col: Column, to: DataType = DoubleType): Column = to match {
     case ByteType | ShortType | IntegerType | LongType =>

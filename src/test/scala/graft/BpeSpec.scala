@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.expressions.BpeTokenCount
 import graft.functions.Bpe
 
 /** Golden ground truth for the BPE kernel (the per-word half of the
@@ -70,7 +69,6 @@ class BpeSpec extends SparkSpecBase {
   }
 
   test("native expression matches the driver kernel and propagates nulls") {
-    BpeTokenCount.ensureRegistered(spark)
     val merges = Bpe.train(sennrich, 5)
     val ranks = Bpe.buildRanks(merges)
     val docs = Seq((0L, "newest newest lowest"), (1L, "low wider"), (2L, null))
@@ -86,7 +84,6 @@ class BpeSpec extends SparkSpecBase {
   }
 
   test("expression stays inside WholeStageCodegen") {
-    BpeTokenCount.ensureRegistered(spark)
     val merges = Bpe.train(sennrich, 5)
     // spark.range (not a local relation) so the projection cannot be
     // constant-folded away before reaching the physical plan
@@ -102,7 +99,6 @@ class BpeSpec extends SparkSpecBase {
   }
 
   test("non-foldable merges argument is rejected at analysis time") {
-    BpeTokenCount.ensureRegistered(spark)
     val df = Seq(("newest", Seq("e s"))).toDF("text", "m")
     val e = intercept[Exception] {
       df.select(call_function("bpe_token_count", col("text"), col("m"))).collect()

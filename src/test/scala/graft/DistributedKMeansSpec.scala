@@ -161,116 +161,6 @@ class DistributedKMeansSpec extends SparkSpecBase {
     } finally df.unpersist()
   }
 
-  /** Orthogonal two-level grid: coarse structure in dims 0-2 (pitch
-    * `coarsePitch`), offset structure in dims 3-5 (pitch `offsetPitch`,
-    * SHARED across coarse groups — the hierarchical quantizer's
-    * residual-codebook premise), jitter ≪ both pitches. True cluster
-    * key = (g, h).
-    */
-  private def plantedHier(g: Int, h: Int, per: Int, dim: Int,
-                          coarsePitch: Double = 100.0,
-                          offsetPitch: Double = 4.0,
-                          jitter: Double = 0.01, seed: Int = 13): DataFrame = {
-    val rng = new scala.util.Random(seed)
-    val sideG = math.max(2, math.ceil(math.pow(g, 1.0 / 3)).toInt)
-    val sideH = math.max(2, math.ceil(math.pow(h, 1.0 / 3)).toInt)
-    val rows = for (gg <- 0 until g; hh <- 0 until h; m <- 0 until per) yield {
-      val v = Array.fill(dim)(0f)
-      v(0) = ((gg % sideG) * coarsePitch).toFloat
-      v(1) = ((gg / sideG % sideG) * coarsePitch).toFloat
-      v(2) = ((gg / sideG / sideG) * coarsePitch).toFloat
-      v(3) = ((hh % sideH) * offsetPitch).toFloat
-      v(4) = ((hh / sideH % sideH) * offsetPitch).toFloat
-      v(5) = ((hh / sideH / sideH) * offsetPitch).toFloat
-      for (i <- 0 until dim) v(i) += (jitter * rng.nextGaussian()).toFloat
-      ((gg.toLong * h + hh) * per + m, v)
-    }
-    toEmbDf(rows)
-  }
-
-  private def hierPartitionOf(emb: DataFrame,
-                              cb: graft.functions.HierarchicalIvf.Codebooks): Set[Set[Long]] = {
-    val (bcS, bcR) = graft.functions.HierarchicalIvf.broadcast2(emb, cb)
-    val p = emb.withColumn("cid",
-        graft.functions.HierarchicalIvf.assignUdf(bcS, bcR)(col("embedding")))
-      .select("vec_id", "cid").collect()
-      .groupBy(_.getLong(1)).values.map(_.map(_.getLong(0)).toSet).toSet
-    bcS.destroy(); bcR.destroy()
-    p
-  }
-
-  test("hierarchical quantizer: partition-equivalent to the flat trainer at small k") {
-    import graft.functions.HierarchicalIvf
-    // 64 planted clusters = 8 coarse cells x 8 shared offsets; both
-    // paths must land on exactly the planted partition, hence on each
-    // other — flat <-> hierarchical equivalence where both can run
-    val (g, h, per) = (8, 8, 5)
-    val df = plantedHier(g, h, per, dim = 8).cache()
-    try {
-      val expected = (0 until g * h)
-        .map(c => (c.toLong * per until (c + 1).toLong * per).toSet).toSet
-      val flat = IvfFunctions.trainCentroids(df, "embedding", g * h, seed = 42)
-      assert(partitionOf(df, flat) == expected,
-        "flat trainer missed the planted partition")
-      val cb = HierarchicalIvf.train(df, "embedding", (g * h).toLong, seed = 42)
-      assert(cb.superC.length * cb.residC.length >= g * h)
-      assert(hierPartitionOf(df, cb) == expected,
-        "hierarchical assignment diverged from the planted (= flat) partition")
-    } finally df.unpersist()
-  }
-
-  test("hierarchical quantizer past the flat 65536 cap: twins co-assign, index discriminates") {
-    import graft.functions.HierarchicalIvf
-    // 260 coarse x 260 offsets = 67,600 addressable clusters > 65,536
-    // (the flat broadcast cap) from two 260-row codebooks. One vector
-    // per (g,h) cell; every 100th cell plants a jittered twin whose
-    // co-assignment is the IVF property that matters (true neighbors
-    // share a probed list).
-    val (g, h) = (260, 260)
-    val k = g.toLong * h
-    assert(k > 65536L)
-    val base = plantedHier(g, h, per = 1, dim = 8, seed = 17)
-    val twins = base.filter(col("vec_id") % 100 === 0)
-      .select((col("vec_id") + k).as("vec_id"),
-        transform(col("embedding"),
-          x => x + (pmod(xxhash64(x), lit(7)).cast("float") - lit(3f)) * lit(1e-3f))
-          .as("embedding"))
-      .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-    val df = base.unionByName(twins).cache()
-    try {
-      val cb = HierarchicalIvf.train(df, "embedding", k, seed = 42)
-      assert(cb.capacity >= k, s"capacity ${cb.capacity} below requested $k")
-      val (bcS, bcR) = HierarchicalIvf.broadcast2(df, cb)
-      val assigned = df.withColumn("cid",
-          HierarchicalIvf.assignUdf(bcS, bcR)(col("embedding")))
-        .select("vec_id", "cid").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      bcS.destroy(); bcR.destroy()
-      // every twin lands in its base vector's composite list
-      val twinIds = (0L until k by 100L)
-      val coAssigned = twinIds.count(i => assigned(i) == assigned(i + k))
-      assert(coAssigned == twinIds.size,
-        s"only $coAssigned/${twinIds.size} twins co-assigned")
-      // Discrimination floor + bounded lists. NOT asserted: perfect
-      // planted-grid recovery — the shared residual codebook sees each
-      // cell's offsets through that cell's centroid, whose dims-3..5
-      // error (mean of a ~130-point hash-cut sample of the offsets,
-      // ε ≈ σ/√130 ≈ 0.18·pitch) smears same-offset blobs across
-      // cells — the known discrimination-for-memory trade of
-      // residual coarse coding (measured here: ~61% distinct lists,
-      // coarse level ~perfect at 1.04 scid/planted-cell). What the
-      // IVF scale premise needs is that lists stay bounded and near-
-      // dups co-assign — both pinned above/below.
-      val baseCids = assigned.filter(_._1 < k).values
-      val distinct = baseCids.toSet.size
-      assert(distinct >= (0.5 * k).toLong,
-        s"only $distinct distinct composite lists for $k planted clusters")
-      val maxList = baseCids.groupBy(identity).values.map(_.size).max
-      assert(maxList <= 150,
-        s"largest composite list $maxList of ${assigned.size} rows")
-    } finally df.unpersist()
-  }
-
   test("IVF ANN at k > 4096: planted neighbors recovered through probed lists") {
     val nGroups = IvfFunctions.singleNodeKCap + 104
     val dim = 32

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.expressions.CosineSimilarity
 import graft.functions.VectorFunctions
 
 /** The native codegen fast_cosine expression vs the declarative
@@ -24,7 +23,6 @@ class FastCosineSpec extends SparkSpecBase {
   }
 
   test("bit-identical to the declarative cosine on random vectors") {
-    CosineSimilarity.ensureRegistered(spark)
     val out = vecs.select(
       VectorFunctions.cosine(col("a"), col("b")).as("slow"),
       VectorFunctions.fastCosine(col("a"), col("b")).as("fast"))
@@ -37,7 +35,6 @@ class FastCosineSpec extends SparkSpecBase {
   }
 
   test("zero vectors yield NULL (divide-by-zero guard) and nulls propagate") {
-    CosineSimilarity.ensureRegistered(spark)
     val df = Seq(
       (Some(Seq(0f, 0f)), Some(Seq(1f, 2f))),
       (None, Some(Seq(1f, 2f))),
@@ -52,7 +49,6 @@ class FastCosineSpec extends SparkSpecBase {
   }
 
   test("unequal lengths: dot over the overlap, norms over full vectors (zip_with parity)") {
-    CosineSimilarity.ensureRegistered(spark)
     // declarative zip_with pads with null and would nullify the dot —
     // equal-length is the data contract; the native form is defined to
     // truncate the dot and include full norms. Pin that behavior.
@@ -65,7 +61,6 @@ class FastCosineSpec extends SparkSpecBase {
   }
 
   test("runs inside whole-stage codegen (no interpreted fallback in the hot path)") {
-    CosineSimilarity.ensureRegistered(spark)
     // a parquet-backed input — a local fixture would constant-fold into
     // a LocalTableScan and bypass codegen entirely
     val emb = graft.sources.Tables.embeddings(spark, sfDir)
@@ -79,7 +74,6 @@ class FastCosineSpec extends SparkSpecBase {
   }
 
   test("SQL surface: expr and spark.sql can call fast_cosine") {
-    CosineSimilarity.ensureRegistered(spark)
     vecs.createOrReplaceTempView("fc_vecs")
     val viaSql = spark.sql(
       "SELECT fast_cosine(a, b) AS c FROM fc_vecs ORDER BY id").collect()

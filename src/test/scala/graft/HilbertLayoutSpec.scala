@@ -86,7 +86,6 @@ class HilbertLayoutSpec extends SparkSpecBase {
   }
 
   test("codegen parity: the DataFrame path matches the static walk") {
-    HilbertIndex.ensureRegistered(spark)
     val rnd = new scala.util.Random(11)
     val pts = Seq.fill(2000)((rnd.nextLong(65536L), rnd.nextLong(65536L)))
     val got = pts.toDF("x", "y")

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.expressions.LshBandKeys
 import graft.functions.VectorFunctions
 
 /** The native codegen lsh_band_keys expression vs the UDF form: must be
@@ -18,7 +17,6 @@ class LshBandKeysFastSpec extends SparkSpecBase {
     df.collect().map(r => (r.getLong(0), r.getSeq[Int](1))).toSeq.sortBy(_._1)
 
   test("bit-identical to the UDF for the ANN config (16 bands x 4 planes)") {
-    LshBandKeys.ensureRegistered(spark)
     val udfKeys = keysOf(emb.select(col("vec_id"),
       VectorFunctions.lshBandKeys()(col("embedding")).as("k")))
     val natKeys = keysOf(emb.select(col("vec_id"),
@@ -27,7 +25,6 @@ class LshBandKeysFastSpec extends SparkSpecBase {
   }
 
   test("bit-identical to the UDF for the near-dup config (8 bands x 8 planes)") {
-    LshBandKeys.ensureRegistered(spark)
     val udfKeys = keysOf(emb.select(col("vec_id"),
       VectorFunctions.lshBandKeys(bands = 8, rowsPerBand = 8)(col("embedding")).as("k")))
     val natKeys = keysOf(emb.select(col("vec_id"),
@@ -36,7 +33,6 @@ class LshBandKeysFastSpec extends SparkSpecBase {
   }
 
   test("band index is recoverable from the key (band << r | bits layout)") {
-    LshBandKeys.ensureRegistered(spark)
     val keys = keysOf(emb.limit(50).select(col("vec_id"),
       VectorFunctions.fastLshBandKeys(col("embedding")).as("k")))
     keys.foreach { case (_, ks) =>
@@ -48,7 +44,6 @@ class LshBandKeysFastSpec extends SparkSpecBase {
   }
 
   test("NULL embedding yields NULL keys") {
-    LshBandKeys.ensureRegistered(spark)
     import spark.implicits._
     val df = Seq((1L, Some(Seq(1f, 2f)), 0), (2L, None, 0)).toDF("id", "v", "pad")
       .select(col("id"), col("v").cast("array<float>").as("v"))
@@ -59,7 +54,6 @@ class LshBandKeysFastSpec extends SparkSpecBase {
   }
 
   test("runs inside whole-stage codegen (no ScalaUDF in the hot path)") {
-    LshBandKeys.ensureRegistered(spark)
     val df = emb.select(col("vec_id"),
       explode(VectorFunctions.fastLshBandKeys(col("embedding"))).as("bk"))
     df.collect()
@@ -70,7 +64,6 @@ class LshBandKeysFastSpec extends SparkSpecBase {
   }
 
   test("SQL surface rejects plane-budget violations at analysis time") {
-    LshBandKeys.ensureRegistered(spark)
     import spark.implicits._
     Seq((1L, Seq(1f, 2f))).toDF("id", "v")
       .select(col("id"), col("v").cast("array<float>").as("v"))

@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.{HierarchicalIvf, IvfFunctions, PqFunctions}
+import graft.functions.{IvfFunctions, PqFunctions}
 
 /** Edge semantics of the shared quantizer kernels (argmin, nearest,
-  * residual, ADC table) as every IVF / PQ / hierarchical-IVF UDF sees
-  * them: non-finite vectors, NaN against +Inf distances, ties, the
-  * two-level assignment, and the ADC fold on a residual query. The
+  * residual, ADC table) as every IVF / PQ UDF sees them: non-finite
+  * vectors, NaN against +Inf distances, ties, and the ADC fold on a
+  * residual query. The
   * oracle replays each of these, so a change here is a change to every
   * hashed ANN result.
   */
@@ -70,26 +70,6 @@ class QuantizerKernelSpec extends SparkSpecBase {
     val codes = v.select(PqFunctions.encodeUdf(PqFunctions.broadcastCodebooks(v, cb))(
       col("embedding"))).head().getSeq[Int](0)
     assert(codes == Seq.fill(PqFunctions.numSubspaces)(1))
-  }
-
-  test("hierarchical assign equals flat argmin -> residual -> argmin") {
-    val rnd = new scala.util.Random(7)
-    val df = vecs((0L until 200L).map(i => (i, Seq.fill(8)(rnd.nextGaussian().toFloat))): _*)
-    val cb = HierarchicalIvf.Codebooks(
-      Array.fill(5)(Array.fill(8)(rnd.nextGaussian())),
-      Array.fill(7)(Array.fill(8)(rnd.nextGaussian() * 0.5)))
-    val (bcS, bcR) = HierarchicalIvf.broadcast2(df, cb)
-    val got = df.select(col("vec_id"),
-        HierarchicalIvf.assignUdf(bcS, bcR)(col("embedding")).as("id"),
-        IvfFunctions.assignUdf(bcS)(col("embedding")).as("scid"), col("embedding"))
-      .withColumn("r", IvfFunctions.residualUdf(bcS)(col("embedding"), col("scid")))
-      .select(col("vec_id"), col("id"), col("scid"),
-        IvfFunctions.assignUdf(bcR)(col("r")).as("rcid"))
-      .collect()
-    assert(got.length == 200)
-    got.foreach { r =>
-      assert(r.getLong(1) == r.getInt(2).toLong * 7 + r.getInt(3), s"vec ${r.getLong(0)}")
-    }
   }
 
   test("adcTable + adcFlat equal an in-test reference sum for a residual query") {

@@ -59,7 +59,6 @@ class SemDedupSpec extends SparkSpecBase {
   test("bucketed (LSH-candidate) SemDeDup equals exact SemDeDup on planted fixtures") {
     import graft.functions.IvfFunctions
     import graft.functions.VectorFunctions.fastLshBandKeys
-    graft.expressions.LshBandKeys.ensureRegistered(spark)
     // mega-cluster regime: one 200-member near-identical group (the
     // s_c² blowup case the bucketing exists for) + 30 isolated vectors
     val rng = new scala.util.Random(31)

@@ -60,7 +60,6 @@ class SimhashSpec extends SparkSpecBase {
   }
 
   test("native simhash64 is bit-identical to the UDF and stays in codegen") {
-    graft.expressions.Simhash64.ensureRegistered(spark)
     import graft.functions.TextFunctions.fastSimhash64
     val docs = Seq("alpha beta gamma delta", "alpha beta beta gamma",
       "completely different tokens").toDF("t")

@@ -40,4 +40,24 @@ class SqlSurfaceSpec extends SparkSpecBase {
     assert(row.getAs[Int]("nfp") > 0)
     assert(row.getAs[Double]("cos") == 1.0)
   }
+
+  test("every native function resolves from SQL in a child session with no registration call") {
+    // one call per function GraftExtensions injects: a function left out
+    // of the extension fails here as an unresolved routine
+    val calls = Seq(
+      "fast_cosine" -> "fast_cosine(CAST(array(1.0, 0.0) AS ARRAY<FLOAT>), CAST(array(1.0, 0.0) AS ARRAY<FLOAT>))",
+      "lsh_band_keys" -> "lsh_band_keys(CAST(array(0.5, -0.5) AS ARRAY<FLOAT>), 2, 4)",
+      "minhash_sig" -> "minhash_sig(array('a b c', 'b c d'))",
+      "simhash64" -> "simhash64(split('alpha beta gamma', ' '))",
+      "deflate_size" -> "deflate_size('aaaaaaaaaaaaaaaa')",
+      "bpe_token_count" -> "bpe_token_count('low lower', array('l o', 'lo w'))",
+      "morton_interleave" -> "morton_interleave(3L, 5L)",
+      "hilbert_index" -> "hilbert_index(3L, 5L)",
+      "vec_all_finite" -> "vec_all_finite(CAST(array(1.0, 2.0) AS ARRAY<FLOAT>))")
+    val child = spark.newSession()
+    calls.foreach { case (name, call) =>
+      assert(call.startsWith(s"$name("))
+      assert(!child.sql(s"SELECT $call AS v").head.isNullAt(0), s"$name returned NULL")
+    }
+  }
 }

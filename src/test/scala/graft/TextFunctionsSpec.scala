@@ -78,7 +78,6 @@ class TextFunctionsSpec extends SparkSpecBase {
   }
 
   test("native minhash_sig is bit-identical to the UDF and stays in codegen") {
-    graft.expressions.MinhashSig.ensureRegistered(spark)
     val docs = Seq("alpha beta gamma delta epsilon", "alpha beta gamma delta zeta",
       "totally different words here now").toDF("t")
       .select(shingles(tokens(col("t")), 3).as("sh"))
@@ -100,7 +99,6 @@ class TextFunctionsSpec extends SparkSpecBase {
   }
 
   test("compression ratio orders repetitive < prose < high-entropy, deterministically") {
-    graft.expressions.DeflateSize.ensureRegistered(spark)
     val rep = "spam spam spam spam " * 50
     val prose = "the quick brown fox jumps over the lazy dog and keeps " +
       "running through fields of green grass toward distant hills " * 10

@@ -16,4 +16,4 @@ set -e
 cd "$(dirname "$0")/.."
 OUT=${1:-/tmp/graft_adv}
 sbt -batch "Test/runMain graft.AdvGenMain $OUT" >/dev/null
-python3 tools/check_correctness.py "$OUT" /tmp/graft_adv_verify
+python3 tools/check_correctness.py "$OUT" "${OUT}_verify"

@@ -8,6 +8,9 @@ order). Reports per-query PASS/FAIL with first-diff detail.
 
 Usage: python3 tools/check_correctness.py [sfDir] [outDir] [--skip-verify]
          [--only q_a,q_b]   # local iteration: verify+check only these
+       python3 tools/check_correctness.py -h | --help
+
+Verify runs in the checkout this script lives in.
 """
 import json
 import math
@@ -17,13 +20,34 @@ from pathlib import Path
 import duckdb
 import pyarrow.parquet as pq
 
+REPO = Path(__file__).resolve().parents[1]
+
+
+def usage_exit(code):
+    (sys.stdout if code == 0 else sys.stderr).write(__doc__)
+    sys.exit(code)
+
+
 ONLY = None
-if "--only" in sys.argv:
-    i = sys.argv.index("--only")
-    ONLY = set(sys.argv[i + 1].split(","))
-    del sys.argv[i:i + 2]
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-OUT_DIR = Path(sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify")
+SKIP_VERIFY = False
+ARGS = []
+_argv = iter(sys.argv[1:])
+for a in _argv:
+    if a in ("-h", "--help"):
+        usage_exit(0)
+    elif a == "--skip-verify":
+        SKIP_VERIFY = True
+    elif a == "--only":
+        names = next(_argv, None)
+        if names is None:
+            usage_exit(2)
+        ONLY = set(names.split(","))
+    elif a.startswith("-") or len(ARGS) == 2:
+        usage_exit(2)
+    else:
+        ARGS.append(a)
+SF_DIR = ARGS[0] if len(ARGS) > 0 else "/root/testdata/sf0.01"
+OUT_DIR = Path(ARGS[1] if len(ARGS) > 1 else "/tmp/graft_verify")
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -32,7 +56,7 @@ def run_verify():
     import subprocess
     names = f" {','.join(sorted(ONLY))}" if ONLY else ""
     cmd = ["sbt", "-batch", f'runMain graft.Verify {SF_DIR} {OUT_DIR}{names}']
-    r = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo")
+    r = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO)
     sys.stdout.write(r.stdout[-3000:])
     if r.returncode != 0:
         sys.stderr.write(r.stderr[-3000:])
@@ -50,7 +74,7 @@ def norm_cell(v):
 
 
 def main():
-    if "--skip-verify" not in sys.argv:
+    if not SKIP_VERIFY:
         run_verify()
     oracle = json.loads((OUT_DIR / "oracle_sql.json").read_text())
     con = duckdb.connect()
