@@ -40,7 +40,6 @@ object Sessions {
   def local(): SparkSession = {
     val spark = builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.registerAll(spark)
     spark
   }
 }

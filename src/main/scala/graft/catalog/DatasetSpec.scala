@@ -35,19 +35,16 @@ final case class DatasetSpec(
     indexes: Seq[(String, Seq[String])] = Nil,
     uniqueConstraints: Seq[Seq[String]] = Nil,
     partitionColumns: Seq[String] = Nil) {
-  def column(name: String): Option[ColumnSpec] = columns.find(_.name == name)
   def requiredColumns: Seq[String] = columns.filter(_.required).map(_.name)
 }
 
-/** SQL-type-string → Spark type compiler + DDL generator (K3) — the
-  * engine mirror of storage.py:73-183's SQLAlchemy table builder.
+/** SQL-type-string → Spark type compiler (K3) — the in-flight side of
+  * storage.py:73-183's SQLAlchemy table builder. The warehouse is
+  * Parquet, so no DDL is generated.
   *
   * Runtime mapping follows SURVEY §1.2: SERIAL→surrogate (storage
   * detail, IntegerType in flight), FLOAT→DoubleType, DATE→DateType,
-  * GEOMETRY→StringType carrying WKT (SRID pinned 4326, §7.4). The DDL
-  * side preserves the reference's *widening* quirks (FLOAT→NUMERIC,
-  * DATE→TIMESTAMP, storage.py:91-92) so generated DDL matches what the
-  * reference would create.
+  * GEOMETRY→StringType carrying WKT (SRID pinned 4326, §7.4).
   */
 object SchemaCompiler {
 
@@ -80,56 +77,5 @@ object SchemaCompiler {
         case "numeric" => DoubleType
         case _ => StringType
       }
-  }
-
-  def toStructType(spec: DatasetSpec): StructType =
-    StructType(spec.columns.map { c =>
-      StructField(c.name, toSparkType(c.sqlType), nullable = !c.required)
-    })
-
-  /** DDL-side type rendering, preserving the reference's widenings
-    * (storage.py:86-96): FLOAT→NUMERIC, DATE→TIMESTAMP, SERIAL kept
-    * (Postgres auto-increment), logical lowercase names normalized.
-    */
-  def toDdlType(sqlType: String): String = sqlType.trim.toUpperCase match {
-    case "FLOAT" => "NUMERIC"
-    case "DATE" => "TIMESTAMP"
-    case "INTEGER" | "SERIAL" | "TEXT" | "TIMESTAMP" | "NUMERIC" | "VARCHAR" => sqlType.trim.toUpperCase
-    case t if t.startsWith("VARCHAR") || t.startsWith("NUMERIC") => t
-    case t if t.startsWith("GEOMETRY") =>
-      // GEOMETRY('MULTIPOLYGON', srid=4326) → GEOMETRY(MULTIPOLYGON, 4326)
-      val TypeWithArgs(_, args) = t: @unchecked
-      val parts = args.split(",").map(_.trim.stripPrefix("'").stripSuffix("'"))
-      val geomType = parts(0).replaceAll("['\"]", "")
-      val srid = parts.drop(1).headOption
-        .map(_.toLowerCase.replace("srid=", "").trim).getOrElse("4326")
-      s"GEOMETRY($geomType, $srid)"
-    case t => t
-  }
-
-  /** K3 — CREATE TABLE + CREATE INDEX statements from the spec
-    * (storage.py:73-183): primary keys, NOT NULL for required, server
-    * defaults, named indexes, uq_<table>_<cols> unique constraints.
-    */
-  def toDdl(spec: DatasetSpec): Seq[String] = {
-    val colDefs = spec.columns.map { c =>
-      val base = s"  ${c.name} ${toDdlType(c.sqlType)}"
-      val notNull = if (c.required && !c.primaryKey) " NOT NULL" else ""
-      val default = c.default.map(d => s" DEFAULT $d").getOrElse("")
-      base + notNull + default
-    }
-    val pks = spec.columns.filter(_.primaryKey).map(_.name)
-    val pkClause =
-      if (pks.isEmpty) Nil else Seq(s"  PRIMARY KEY (${pks.mkString(", ")})")
-    val uqClauses = spec.uniqueConstraints.map { cols =>
-      s"  CONSTRAINT uq_${spec.tableName}_${cols.mkString("_")} UNIQUE (${cols.mkString(", ")})"
-    }
-    val create =
-      s"CREATE TABLE IF NOT EXISTS ${spec.tableName} (\n" +
-        (colDefs ++ pkClause ++ uqClauses).mkString(",\n") + "\n)"
-    val indexes = spec.indexes.map { case (name, cols) =>
-      s"CREATE INDEX IF NOT EXISTS $name ON ${spec.tableName} (${cols.mkString(", ")})"
-    }
-    create +: indexes
   }
 }

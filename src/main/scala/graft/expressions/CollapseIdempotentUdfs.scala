@@ -26,8 +26,8 @@ object CollapseIdempotentUdfs extends Rule[LogicalPlan] {
 
   /** Engine UDFs proven idempotent (specs referenced above), listed
     * under BOTH surfaces' names: the DataFrame-side withName and the
-    * SQL registration alias (GraftFunctions.registerAll) — a UDF only
-    * collapses under the name it was invoked with.
+    * SQL alias (GraftFunctions.sqlAliases) — a UDF only collapses under
+    * the name it was invoked with.
     */
   private val idempotent = Set("promoteToMultiPolygon", "st_multi")
 

@@ -10,8 +10,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * Catalyst expression with whole-stage codegen for the similarity hot
   * path.
   *
-  * The declarative form ([[graft.functions.VectorFunctions.cosine]]:
-  * `aggregate(zip_with(...))`) is semantically identical but walks
+  * The declarative form (`aggregate(zip_with(...))`, kept as the spec
+  * oracle in FastCosineSpec) is semantically identical but walks
   * boxed higher-order-function lambdas per element — fine per row,
   * costly when near-dup/ANN reranks evaluate millions of candidate
   * pairs. This expression compiles to a primitive `while` loop over
@@ -124,10 +124,11 @@ object CosineSimilarity {
 /** SparkSessionExtensions hook: `.withExtensions(new GraftExtensions)`. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    // every native expression; newSession() children inherit them
-    Seq(CosineSimilarity.fn, LshBandKeys.fn, MinhashSig.fn, Simhash64.fn,
+    // every native expression and ScalaUDF SQL alias; newSession()
+    // children inherit them
+    (Seq(CosineSimilarity.fn, LshBandKeys.fn, MinhashSig.fn, Simhash64.fn,
       DeflateSize.fn, BpeTokenCount.fn, MortonInterleave.fn, HilbertIndex.fn,
-      VecAllFinite.fn)
+      VecAllFinite.fn) ++ graft.functions.GraftFunctions.sqlAliases)
       .foreach(f => ext.injectFunction(f.injectable))
     ext.injectOptimizerRule(_ => CollapseIdempotentUdfs)
     // whole-operator tier: the bounded-heap top-k-per-group physical

@@ -148,8 +148,8 @@ object LshBandKeys {
           s"bands * rows_per_band <= $maxPlanes; got bands=$bands, rows_per_band=$rowsPerBand")
 
   /** THE seeded-Gaussian plane matrix (seed 7) — the single definition
-    * both the native expression and VectorFunctions' UDF read, so the
-    * two surfaces cannot drift (bit-identity also pinned by
+    * both the native expression and the specs' reference UDF read, so
+    * the two cannot drift (bit-identity also pinned by
     * LshBandKeysFastSpec).
     */
   private[graft] lazy val planes: Array[Array[Double]] = {

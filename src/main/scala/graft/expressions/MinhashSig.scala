@@ -9,10 +9,11 @@ import org.apache.spark.sql.types._
 import graft.functions.TextFunctions
 
 /** `minhash_sig(array<string>) -> array<bigint>` — native form of the
-  * MinHash signature (graft.functions.TextFunctions.minhashSig).
+  * MinHash signature (graft.functions.TextFunctions.fastMinhashSig).
   *
-  * The UDF form pays CatalystTypeConverters both ways on EVERY row: the
-  * shingle array deserializes to a boxed Seq[String] and the signature
+  * A ScalaUDF form (the spec oracle in ReferenceKernels) pays
+  * CatalystTypeConverters both ways on EVERY row: the shingle array
+  * deserializes to a boxed Seq[String] and the signature
   * re-serializes from Seq[Long] — and the ScalaUDF node breaks the
   * surrounding WholeStageCodegen stage. This expression reads shingles
   * straight out of ArrayData and returns the long[] wrapped once, and

@@ -3,10 +3,10 @@ package graft.expressions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** One registration record per native expression — the single
-  * implementation of the identifier/info/arity-checked-builder
-  * boilerplate every expression object was copy-pasting, injected by
-  * the SparkSessionExtensions hook ([[GraftExtensions]]).
+/** One registration record per injected SQL function (a native
+  * expression or a ScalaUDF alias) — the single implementation of the
+  * identifier/info/arity-checked-builder boilerplate, injected by the
+  * SparkSessionExtensions hook ([[GraftExtensions]]).
   */
 private[graft] final case class NativeFn(
     name: String,

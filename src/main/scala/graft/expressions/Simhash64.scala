@@ -10,10 +10,11 @@ import graft.functions.TextFunctions
 
 /** `simhash64(array<string>) -> bigint` — native form of the
   * token-frequency-weighted 64-bit SimHash
-  * (graft.functions.TextFunctions.simhash64). Same promotion rationale
-  * as [[MinhashSig]]: the UDF boxes every token array to Seq[String]
-  * and breaks whole-stage codegen; the expression reads tokens out of
-  * ArrayData and returns a primitive long. Hash math is shared with
+  * (graft.functions.TextFunctions.fastSimhash64). Same promotion
+  * rationale as [[MinhashSig]]: the UDF form (the spec oracle) boxes
+  * every token array to Seq[String] and breaks whole-stage codegen;
+  * the expression reads tokens out of ArrayData and returns a
+  * primitive long. Hash math is shared with
   * the UDF (TextFunctions.simTokenHash), so bit-identity holds by
   * construction for non-null input (pinned in SimhashSpec).
   *

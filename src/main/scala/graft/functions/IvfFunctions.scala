@@ -403,16 +403,10 @@ object IvfFunctions {
     }
 
   /** End-to-end IVF top-k: index `emb`, answer `queries` (vec_id,
-    * embedding) with exact-cosine rerank over the probed lists.
-    */
-  def annTopK(emb: DataFrame, queries: DataFrame, k: Int, nProbe: Int,
-              topK: Int, seed: Long = 42): DataFrame =
-    annTopKWith(emb, queries, trainCentroids(emb, "embedding", k, seed),
-      nProbe, topK)
-
-  /** [[annTopK]] with a pre-trained centroid table — lets the catalog
-    * entry materialize the exact centroids it retrieves with for the
-    * DuckDB oracle replay (assignment + probe + rerank re-run in SQL).
+    * embedding) with exact-cosine rerank over the probed lists. The
+    * centroid table is pre-trained, so the catalog entry can
+    * materialize the exact centroids it retrieves with for the DuckDB
+    * oracle replay (assignment + probe + rerank re-run in SQL).
     */
   def annTopKWith(emb: DataFrame, queries: DataFrame,
                   centroidRows: Array[Array[Double]], nProbe: Int,

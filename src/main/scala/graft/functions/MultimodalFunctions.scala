@@ -14,10 +14,10 @@ import org.apache.spark.sql.types._
   * ([[graft.functions.MediaContainers]]: PNG IHDR/acTL, JPEG SOFn, GIF
   * logical screen descriptor + frame walk, RIFF/WAV fmt+data), pure
   * Scala against the published layouts — no codec library needed for
-  * header-level metadata. Pixel/sample DECODE (resize) remains a stub:
-  * decompressing IDAT pixel data or JPEG entropy streams is codec
-  * work; the schema contract and batching seam are what downstream
-  * code depends on.
+  * header-level metadata. Pixel/sample DECODE is out of scope beyond
+  * the grayscale box resize ([[boxResizeGray]]): decompressing IDAT
+  * pixel data or JPEG entropy streams is codec work; the schema
+  * contract and batching seam are what downstream code depends on.
   *
   * Scale design: everything is per-row/per-partition — no shuffle.
   * [[mapBinaryBatches]] is the Scala analog of Python's
@@ -88,23 +88,6 @@ object MultimodalFunctions {
       r += 1
     }
     (ow, oh, out)
-  }
-
-  /** STUB resize — returns a deterministically truncated/padded payload
-    * with the target "dimensions" baked into the length (for payload
-    * formats where only the header decodes; grayscale PNG resizes for
-    * real via [[boxResizeGray]]). The schema contract — binary in,
-    * binary out — is what downstream code depends on.
-    */
-  def resizeStub(payload: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    val target = math.max(1, (w * h) / 64)
-    val out = new Array[Byte](target)
-    var i = 0
-    while (i < target) {
-      out(i) = if (payload != null && payload.length > 0) payload(i % payload.length) else 0
-      i += 1
-    }
-    out
   }
 
   /** Frame sampling: split a payload into `n` evenly-sized chunks

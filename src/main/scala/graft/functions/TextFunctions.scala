@@ -103,29 +103,9 @@ object TextFunctions {
     ((h1.toLong << 32) | (h2.toLong & 0xffffffffL)) & ((1L << 61) - 1)
   }
 
-  /** MinHash signature of a shingle set (k mins). Empty set → all MaxValue. */
-  val minhashSig: UserDefinedFunction = udf { shingles: Seq[String] =>
-    val sig = Array.fill(minhashK)(Long.MaxValue)
-    if (shingles != null) {
-      var i = 0
-      val distinct = shingles.distinct
-      while (i < distinct.length) {
-        val x = baseHash(distinct(i))
-        var k = 0
-        while (k < minhashK) {
-          val (a, b) = hashParams(k)
-          val h = permute(a, b, x)
-          if (h < sig(k)) sig(k) = h
-          k += 1
-        }
-        i += 1
-      }
-    }
-    sig.toSeq
-  }
-
-  /** Native codegen form of [[minhashSig]] (graft.expressions.MinhashSig):
-    * same signature math, no per-row boxing, stays inside
+  /** MinHash signature of a shingle set (k mins; empty set → all
+    * MaxValue): the native codegen expression (graft.expressions.MinhashSig)
+    * over [[baseHash]] and [[permute]], no per-row boxing, stays inside
     * WholeStageCodegen. Resolves in any session built by
     * [[graft.Sessions]] (GraftExtensions injects it).
     */
@@ -150,24 +130,9 @@ object TextFunctions {
     (h1.toLong << 32) | (h2.toLong & 0xffffffffL)
   }
 
-  val simhash64: UserDefinedFunction = udf { toks: Seq[String] =>
-    val acc = new Array[Int](64)
-    if (toks != null) toks.foreach { t =>
-      val h = simTokenHash(t)
-      var bit = 0
-      while (bit < 64) {
-        if (((h >>> bit) & 1L) == 1L) acc(bit) += 1 else acc(bit) -= 1
-        bit += 1
-      }
-    }
-    var out = 0L
-    var bit = 0
-    while (bit < 64) { if (acc(bit) > 0) out |= (1L << bit); bit += 1 }
-    out
-  }
-
-  /** Native codegen form of [[simhash64]] (graft.expressions.Simhash64);
-    * same registration contract as [[fastMinhashSig]].
+  /** 64-bit token-frequency-weighted SimHash over [[simTokenHash]]: the
+    * native codegen expression (graft.expressions.Simhash64); same
+    * registration contract as [[fastMinhashSig]].
     */
   def fastSimhash64(toks: Column): Column =
     call_function("simhash64", toks)

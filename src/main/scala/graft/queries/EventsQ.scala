@@ -10,9 +10,7 @@ import graft.sources.Tables
 import Num._
 
 /** Event-log queries: JSON prop extraction, tumbling-window rollups, and
-  * batch sessionization (gaps-and-islands). The same semantics run as
-  * Structured Streaming in graft.streaming (watermark + window +
-  * flatMapGroupsWithState); the batch forms here are oracle-checkable.
+  * batch sessionization (gaps-and-islands), each oracle-checkable.
   *
   * Precision note: events.ts is nanosecond-precision in the parquet.
   * Spark truncates to microseconds on read while DuckDB keeps ns, so
@@ -60,8 +58,8 @@ object EventsQ {
       .orderBy(col("event_type").asc, col("k_mod").asc)
   }
 
-  /** Tumbling 1-hour window rollup (batch form of the streaming windowed
-    * agg). date_trunc keeps bucket boundaries identical across engines.
+  /** Tumbling 1-hour window rollup. date_trunc keeps bucket boundaries
+    * identical across engines.
     */
   val qTumblingWindow: Q = Q.sql(
     "q_events_tumbling",
@@ -84,8 +82,7 @@ object EventsQ {
   }
 
   /** Batch sessionization: gaps-and-islands with a 30-minute idle gap.
-    * Same session definition as the streaming flatMapGroupsWithState
-    * implementation; second-granularity epochs for cross-engine parity.
+    * Second-granularity epochs for cross-engine parity.
     * One shuffle on user_id; per-user state is bounded (windows over a
     * single user's ordered events), so this scales linearly.
     */
@@ -336,11 +333,8 @@ object EventsQ {
     * same user in the preceding 30 minutes. Equi-join on user_id with
     * the time window as a range predicate; at scale the join shuffles
     * only the two filtered event subsets (views + clicks, a fraction of
-    * the log), keyed uniformly by user. The streaming form
-    * (StreamingEvents.attributionJoin) runs the same semantics with
-    * watermark-bounded state; StreamingEventsSpec proves parity.
-    * lag_sec uses integer microsecond arithmetic — exact in both
-    * engines.
+    * the log), keyed uniformly by user. lag_sec uses integer
+    * microsecond arithmetic — exact in both engines.
     */
   val qAttribution: Q = Q.sql(
     "q_events_attribution",
@@ -460,8 +454,7 @@ object EventsQ {
   }
 
   /** Per-type (Σv, Σv², n) as decimal-exact doubles — the trained side
-    * of anomaly scoring, shared by the batch query and the streaming
-    * scorer (StreamingEvents.anomalyStream).
+    * of anomaly scoring.
     */
   def anomalyStats(ev: DataFrame): DataFrame =
     ev.groupBy("event_type").agg(
@@ -1819,12 +1812,8 @@ object EventsQ {
     intervalOverlapFromSpans(sessionSpans(s, d))
   }
 
-  /** The whole overlap-ranking tail over ANY (user_id, session_id,
-    * start_sec, end_sec) span table — factored out of
-    * [[qIntervalOverlap]] so the streaming path (spans emitted
-    * incrementally by StreamingEvents.sessionize, ranked by this same
-    * delta sweep — the round-10 streaming twin) provably runs the
-    * identical algebra as the batch query (StreamingSweepSpec).
+  /** The whole overlap-ranking tail of [[qIntervalOverlap]] over ANY
+    * (user_id, session_id, start_sec, end_sec) span table.
     */
   private[graft] def intervalOverlapFromSpans(spans: DataFrame): DataFrame = {
     val mm = spans.agg(min("start_sec"), max("end_sec")).head()

@@ -704,8 +704,7 @@ object PipelineQ {
   /** The full normalize pipeline as a column expression — NFC compose,
     * strip non-whitespace controls (tab/newline/CR stay, so the
     * whitespace collapse turns them into single spaces instead of
-    * gluing words), collapse runs, trim. Shared by the batch queries
-    * and the streaming curation path.
+    * gluing words), collapse runs, trim. Shared by the batch queries.
     */
   def normText(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     trim(regexp_replace(
@@ -1707,9 +1706,8 @@ object PipelineQ {
   }
 
   /** The stable train/val/test assignment (90/5/5 md5 cut on doc_id) —
-    * ONE definition shared by the batch curate flagship and the
-    * streaming packing tail (StreamingDocs), so split membership can
-    * never diverge between ingest-time and batch curation.
+    * ONE definition for every query that splits, so split membership
+    * cannot diverge between them.
     */
   def splitCol: Column =
     when(docHashPrefix < "e6666666", "train")

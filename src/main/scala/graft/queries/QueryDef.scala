@@ -41,10 +41,6 @@ object Q {
       fn: (SparkSession, String) => DataFrame): Q =
     Q(name, fn, Some(oracle), doc)
 
-  def rowsOnly(name: String, doc: String = "")(
-      fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, fn, None, doc)
-
   /** NULLS-FIRST string ordering for DRIVER-side folds over collected
     * group keys (mixture normalizers, rate-table builds). Matches the
     * oracle side's pinned `ORDER BY key ASC NULLS FIRST` list folds —

@@ -926,18 +926,10 @@ object SimilarityQ {
         corpusKey(Tables.embeddings(s, d)), singleFile = false)
     }
 
-  /** LSH-candidate + exact-rerank near-dup over any (vec_id, embedding)
-    * frame; factored out so specs can run it on planted fixtures.
-    */
-  def embeddingNearDupLsh(emb: DataFrame, threshold: Double): DataFrame =
-    embeddingNearDupLshFromKeys(
-      emb.select(col("vec_id"),
-        explode(fastLshBandKeys(col("embedding"), bands = 8, rowsPerBand = 8)).as("bk")),
-      emb, threshold)
-
-  /** The candidate-join + rerank stage over a precomputed (vec_id, bk)
-    * band-key frame — split out so the catalog entry shares one cached
-    * band-key pass between the aux write and the join.
+  /** LSH-candidate + exact-rerank near-dup: the candidate-join + rerank
+    * stage over a precomputed (vec_id, bk) band-key frame, so the
+    * catalog entry shares one cached band-key pass between the aux
+    * write and the join.
     */
   def embeddingNearDupLshFromKeys(keyed: DataFrame, emb: DataFrame,
                                   threshold: Double): DataFrame = {
@@ -1126,8 +1118,7 @@ object SimilarityQ {
 
   /** PERSISTENT-INDEX ANN — the deployment shape of [[qAnnIvf]]: the
     * coarse quantizer and the cid-bucketed inverted lists are
-    * MATERIALIZED warehouse tables ([[graft.sink.VectorIndex]], the
-    * embedding twin of the text side's BandIndex), and this
+    * MATERIALIZED warehouse tables ([[graft.sink.VectorIndex]]), and this
     * query is the SEARCH path: load the k-row centroid table, probe,
     * read ONLY the probed buckets (cid IN (…) → bucket pruning at the
     * scan; the index side never shuffles), exact-rerank. No k-means,
@@ -1304,14 +1295,10 @@ object SimilarityQ {
     * cluster sizes stay bounded (the paper runs k=50k on LAION), the
     * pair join is an equi-join on the int cluster id, and the drop set
     * is an anti-join. Centroids ride a TorrentBroadcast.
-    */
-  def semDedup(emb: DataFrame, k: Int, tau: Double, seed: Long = 42): DataFrame =
-    semDedupWith(emb,
-      IvfFunctions.trainCentroids(emb, "embedding", k, seed), tau)
-
-  /** [[semDedup]] with a pre-trained centroid table (see
-    * [[IvfFunctions.annTopKWith]] for why: the catalog
-    * entry materializes exactly these centroids for the oracle replay).
+    *
+    * The centroid table is pre-trained (see [[IvfFunctions.annTopKWith]]
+    * for why: the catalog entry materializes exactly these centroids
+    * for the oracle replay).
     */
   def semDedupWith(emb: DataFrame, centroidRows: Array[Array[Double]],
                    tau: Double): DataFrame = {

@@ -528,47 +528,6 @@ object TextQ {
        |  JOIN sizes sb ON p.doc_b = sb.doc_id
        |  WHERE CAST(p.shared AS DOUBLE) / (sa.n + sb.n - p.shared) >= 0.5)""".stripMargin
 
-  /** Spark side of [[jaccardPairsSql]]: exact n-gram Jaccard near-dup
-    * pairs (doc_a, doc_b, jaccard ≥ 0.5), candidates from shared
-    * DF-capped shingles. Unordered — callers add their own ORDER BY.
-    *
-    * "Exact" is relative to the candidate cap: pairs sharing only
-    * shingles hotter than `dfCap` are not emitted (see the
-    * [[maxShingleDf]] caveat). `dfCap` is a parameter so JaccardCapSpec
-    * can measure that sensitivity; the catalog entry always runs the
-    * production [[maxShingleDf]].
-    */
-  def ngramJaccardPairs(s: org.apache.spark.sql.SparkSession, d: String,
-                        dfCap: Long = maxShingleDf): DataFrame = {
-    // checkpointed: feeds sizes, the DF filter, and both sides of the
-    // pair join — without it the tokenize+explode+distinct runs three
-    // times (at 100 TB you would persist or checkpoint this table the
-    // same way). localCheckpoint, not cache: no CacheManager entry, and
-    // the blocks free automatically when the result is dropped.
-    val sh = Tables.documents(s, d)
-      .select(col("doc_id"), tokens(col("text")).as("t"))
-      .filter(size(col("t")) >= 3)
-      .select(col("doc_id"), explode(shingles(col("t"), 3)).as("shingle"))
-      .distinct()
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val rare = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= dfCap).select("shingle")
-    val shRare = sh.join(rare, "shingle")
-    val pairs = shRare.as("a")
-      .join(sh.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("shared"))
-    val jac = col("shared").cast(DoubleType) /
-      (col("sa.n") + col("sb.n") - col("shared"))
-    pairs
-      .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .filter(jac >= 0.5)
-      .select(col("doc_a"), col("doc_b"), jac.as("jaccard"))
-  }
-
   /** Exact n-gram Jaccard near-dup pairs, candidates from shared
     * shingles (with DF cap), verified exactly. Fully SQL-expressible →
     * strong oracle for the whole near-dup family — strong UP TO the
@@ -605,30 +564,45 @@ object TextQ {
   private[graft] def candidatePairStats(s: org.apache.spark.sql.SparkSession,
                                         d: String): DataFrame =
     SharedFrames.frame(s, s"cand_pair_stats:$d") {
-      val sh = Tables.documents(s, d)
-        .select(col("doc_id"), tokens(col("text")).as("t"))
-        .filter(size(col("t")) >= 3)
-        .select(col("doc_id"), explode(shingles(col("t"), 3)).as("shingle"))
-        .distinct()
-        .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val rare = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-        .filter(col("df") <= maxShingleDf).select("shingle")
-      sh.join(rare, "shingle").as("a")
-        .join(sh.as("b"),
-          col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .agg(count(lit(1)).as("shared"))
-        .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), Seq("doc_a"))
-        .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), Seq("doc_b"))
-        // consumers' predicate union — see scaladoc; widen when adding
-        // a consumer with a weaker threshold
-        .filter(
-          col("shared").cast(DoubleType) /
-            (col("n_a") + col("n_b") - col("shared")) >= 0.5 ||
-          col("shared").cast(DoubleType) / least(col("n_a"), col("n_b")) >= 0.8)
+      candidatePairs(s, d, maxShingleDf)
         .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
     }
+
+  /** The candidate-join pass [[candidatePairStats]] memoizes, before
+    * its checkpoint. "Exact" is relative to the candidate cap: pairs
+    * sharing only shingles hotter than `dfCap` are not emitted (see
+    * the [[maxShingleDf]] caveat). `dfCap` is a parameter so
+    * JaccardCapSpec can measure that sensitivity; the catalog always
+    * runs the production [[maxShingleDf]].
+    */
+  private[graft] def candidatePairs(s: org.apache.spark.sql.SparkSession,
+                                    d: String, dfCap: Int): DataFrame = {
+    // checkpointed: feeds sizes, the DF filter, and both sides of the
+    // pair join — without it the tokenize+explode+distinct runs three
+    // times
+    val sh = Tables.documents(s, d)
+      .select(col("doc_id"), tokens(col("text")).as("t"))
+      .filter(size(col("t")) >= 3)
+      .select(col("doc_id"), explode(shingles(col("t"), 3)).as("shingle"))
+      .distinct()
+      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    val rare = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
+      .filter(col("df") <= dfCap).select("shingle")
+    sh.join(rare, "shingle").as("a")
+      .join(sh.as("b"),
+        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .agg(count(lit(1)).as("shared"))
+      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), Seq("doc_a"))
+      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), Seq("doc_b"))
+      // consumers' predicate union — see [[candidatePairStats]]; widen when adding
+      // a consumer with a weaker threshold
+      .filter(
+        col("shared").cast(DoubleType) /
+          (col("n_a") + col("n_b") - col("shared")) >= 0.5 ||
+        col("shared").cast(DoubleType) / least(col("n_a"), col("n_b")) >= 0.8)
+  }
 
   def jaccardPairsShared(s: org.apache.spark.sql.SparkSession,
                          d: String): DataFrame =
@@ -1087,20 +1061,6 @@ object TextQ {
         .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
     }
 
-  /** The fingerprint-overlap pipeline over any (doc_id, text) frame —
-    * factored out so the spec can grade recall on planted duplicates.
-    */
-  def fingerprintNearDup(docs: org.apache.spark.sql.DataFrame,
-                         minShared: Int): org.apache.spark.sql.DataFrame =
-    fingerprintNearDupFromFp(
-      docs.select(col("doc_id"), explode(fingerprints(col("text"))).as("fp"))
-        .distinct()
-        // checkpoint, not cache: lineage-free single evaluation with no
-        // CacheManager entry to leak (ContextCleaner reclaims blocks
-        // when the caller drops the result)
-        .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER),
-      minShared)
-
   /** The DF-cap + self-join stage over a precomputed distinct
     * (doc_id, fp) frame — split out so the catalog entry can share one
     * cached winnowing pass between the aux write and the join.
@@ -1509,22 +1469,6 @@ object TextQ {
     OracleAux.prepareOnce(s, lmAuxDir, d) {
       OracleAux.write(lmTable(s, d), lmAuxDir,
         docsKey(Tables.documents(s, d)))
-    }
-
-  /** Driver-side export of the trained LM for stateless broadcast use
-    * (the streaming ingest gate, StreamingDocs.curateStream): the
-    * capped vocab plus the quantized (gram → lp) rows. Bounded by the
-    * pruned bigram table — the same size envelope that already makes
-    * the batch scoring join broadcastable.
-    */
-  def lmModel(s: org.apache.spark.sql.SparkSession,
-              d: String): (Seq[String], Seq[(String, java.math.BigDecimal)]) =
-    SharedFrames.value(s, s"lm_model_rows:$d") {
-      val vocab = lmVocab(s, d)
-      val rows = lmTable(s, d).filter(col("kind") === "b")
-        .select("term", "lp").collect()
-        .map(r => r.getString(0) -> r.getDecimal(1)).toSeq
-      (vocab, rows)
     }
 
   /** LM PERPLEXITY filter (CCNet, Wenzek et al. 2020): score every
@@ -1952,11 +1896,6 @@ object TextQ {
       .toMap
   }
 
-  def cmsTopGrams(docs: DataFrame, depth: Int, prefixLen: Int,
-                  divisor: Long): DataFrame =
-    cmsTopGramsWith(docs, cmsSketch(docs, depth, prefixLen), depth,
-      prefixLen, divisor)
-
   /** Pass 2 over a prebuilt sketch (the catalog entry memoizes the
     * sketch per (session, corpus) — a per-corpus trained artifact like
     * the LM/quality tables, so repeat invocations pay only this pass).
@@ -2335,13 +2274,8 @@ object TextQ {
     * documents that are near-duplicates of nothing already kept. The
     * deterministic doc_id%3 split stands in for the batch boundary.
     *
-    * Scale shape: candidates come from a keys-only (band, bh) join —
-    * at production scale the corpus side IS the persistent BUCKETED
-    * band index ([[graft.sink.BandIndex]]: batch-only shuffle,
-    * index read bucket-aligned with zero Exchange, appends preserve
-    * the spec; BandIndexSpec proves result-identity with this
-    * query's join and pins the single-Exchange plan). The Jaccard
-    * rerank joins shingles for candidate pairs only.
+    * Scale shape: candidates come from a keys-only (band, bh) join.
+    * The Jaccard rerank joins shingles for candidate pairs only.
     *
     * ORACLE REPLAY: DuckDB reads the published band table, splits it
     * by the same %3 rule, and replays candidates, exact rerank, and

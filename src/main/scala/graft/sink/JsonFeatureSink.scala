@@ -14,15 +14,10 @@ import org.apache.spark.sql.functions._
   * (src/api/routes.py:24-42); the batch exporter dumps the same value to
   * the viz/public/data JSON files (scripts/export_static_data.py:118-147).
   *
-  * Two write paths:
-  *   - [[writeFeatureCollection]]: one self-contained FeatureCollection
-  *     file — the reference's serving shape, correct for bounded outputs
-  *     (≤ thousands of features; the reference's real datasets are
-  *     197/177/155 features);
-  *   - [[writeFeatureLines]]: one Feature per line (JSON-lines), written
-  *     distributed with no driver collect — the 100 TB path. A consumer
-  *     can stream-concatenate lines into a FeatureCollection, and
-  *     `spark.read.json` reads it back natively.
+  * The write path is [[writeFeatureCollection]]: one self-contained
+  * FeatureCollection file — the reference's serving shape, correct for
+  * bounded outputs (≤ thousands of features; the reference's real
+  * datasets are 197/177/155 features).
   */
 object JsonFeatureSink {
 
@@ -87,11 +82,4 @@ object JsonFeatureSink {
     val joined = if (row.isNullAt(0)) "" else row.getString(0)
     (s"""{"type":"FeatureCollection","features":[$joined]}""", row.getLong(1))
   }
-
-  /** Scale path — distributed JSON-lines write (one Feature per line,
-    * no driver materialization, partitioned output directory).
-    */
-  def writeFeatureLines(features: DataFrame, dir: String,
-                        featureCol: String = "feature"): Unit =
-    features.select(col(featureCol)).write.mode("overwrite").text(dir)
 }

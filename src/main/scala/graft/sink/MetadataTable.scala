@@ -3,7 +3,7 @@ package graft.sink
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoders, SparkSession}
 
 /** K5 — per-dataset ingestion bookkeeping (storage.py:299-334): one row
   * per dataset_id holding last ingestion time, record count, status —
@@ -41,7 +41,4 @@ object MetadataTable {
       MetadataEntry(datasetId, tableName, now, recordCount, status)).sortBy(_.dataset_id)
     UpsertSink.writeAtomic(spark.createDataset(rows)(encoder).toDF().coalesce(1), target)
   }
-
-  def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
 }

@@ -1,7 +1,7 @@
 package graft.sink
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.UUID
+import java.util.{Comparator, UUID}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,18 +11,13 @@ import graft.transform.Ops
 /** K1/K2 — the reference's storage layer re-expressed for an engine
   * whose tables live as Parquet (offline: no Postgres at test time).
   *
-  * Two upsert strategies (SURVEY §2.2 K2):
-  *  (a) [[upsertParquet]] — key-preferring latest-wins overwrite for
-  *      engine-managed tables: read existing ∪ incoming, keep the
-  *      incoming row per unique key, rewrite atomically (temp dir +
-  *      directory swap — §7.5.4's "write-new-then-swap"; no
-  *      transactional store offline).
-  *  (b) [[upsertSql]] — the PostgreSQL `INSERT … ON CONFLICT` statement
-  *      generator (storage.py:230-297 semantics: DO UPDATE SET every
-  *      non-key column from EXCLUDED, falling back to DO NOTHING when
-  *      only key columns exist), for use with a real JDBC sink.
+  * The upsert (SURVEY §2.2 K2) is [[upsertParquet]]: a key-preferring
+  * latest-wins overwrite for engine-managed tables. It reads existing ∪
+  * incoming, keeps the incoming row per unique key, and rewrites
+  * atomically (temp dir + directory swap — §7.5.4's
+  * "write-new-then-swap"; no transactional store offline).
   *
-  * Scale notes: (a) rewrites the table — correct for the reference's
+  * Scale notes: the upsert rewrites the table — correct for the reference's
   * dimension-sized tables (hundreds to thousands of rows); at 100 TB
   * the same latest-wins plan applies per partition (the union +
   * window shuffles once on the unique keys) and you'd overwrite only
@@ -32,7 +27,7 @@ import graft.transform.Ops
   */
 object UpsertSink {
 
-  /** Strategy (a): latest-wins upsert into a Parquet directory.
+  /** Latest-wins upsert into a Parquet directory.
     * Incoming rows beat existing rows on the same key; ties inside a
     * single batch resolve by `tieBreak` (defaults to arbitrary-but-
     * deterministic: all non-key columns desc).
@@ -83,37 +78,11 @@ object UpsertSink {
     if (existed) deleteRecursively(old)
   }
 
-  private def deleteRecursively(p: Path): Unit = FsUtil.deleteRecursively(p)
-
-  /** Strategy (b): PostgreSQL upsert statement generator
-    * (storage.py:265-287). Every non-key column updates from EXCLUDED;
-    * with nothing to update the conflict is ignored.
-    */
-  def upsertSql(table: String, columns: Seq[String], uniqueCols: Seq[String]): String = {
-    require(uniqueCols.nonEmpty && uniqueCols.forall(columns.contains),
-      "unique columns must be a subset of columns")
-    val collist = columns.mkString(", ")
-    val placeholders = columns.map(_ => "?").mkString(", ")
-    val updatable = columns.filterNot(uniqueCols.contains)
-    val conflict =
-      if (updatable.isEmpty) "DO NOTHING"
-      else "DO UPDATE SET " + updatable.map(c => s"$c = EXCLUDED.$c").mkString(", ")
-    s"INSERT INTO $table ($collist) VALUES ($placeholders) " +
-      s"ON CONFLICT (${uniqueCols.mkString(", ")}) $conflict"
-  }
-
-  /** K1 — JDBC append with the reference's batching (storage.py:211-218:
-    * chunksize 1000, multi-row inserts → Spark `batchsize`). Untestable
-    * offline (no database in the container); exercised only through its
-    * option set.
-    */
-  def jdbcAppendOptions(batchSize: Int = 1000): Map[String, String] =
-    Map("batchsize" -> batchSize.toString, "isolationLevel" -> "READ_COMMITTED")
-
-  def jdbcAppend(df: DataFrame, url: String, table: String,
-                 properties: java.util.Properties,
-                 batchSize: Int = 1000): Unit = {
-    jdbcAppendOptions(batchSize).foreach { case (k, v) => properties.setProperty(k, v) }
-    df.write.mode("append").jdbc(url, table, properties)
+  private def deleteRecursively(p: Path): Unit = {
+    val s = Files.walk(p)
+    // sorted() drains the walk before the first delete, so removing
+    // entries during iteration cannot invalidate the stream
+    try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
+    finally s.close()
   }
 }

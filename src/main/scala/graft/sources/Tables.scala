@@ -53,9 +53,6 @@ object Tables {
   private val relationMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, DataFrame)]()
 
-  /** Visible for tests: current number of memoized relations. */
-  private[graft] def memoSize: Int = relationMemo.size
-
   private def contentSignature(path: java.nio.file.Path): String = {
     import java.nio.file.Files
     def stamp(p: java.nio.file.Path): String =
@@ -127,10 +124,10 @@ object Tables {
 
   /** Normalize the `ts` column of an events frame to session-tz
     * TimestampType whatever physical shape it was read in (see
-    * [[events]]). Shared by the batch loader and the streaming file
-    * source ([[graft.streaming.StreamingEvents.readEventsStream]]).
+    * [[events]]). Shared by the batch loader and the pipeline CLI's
+    * raw-file ingest ([[graft.jobs.Main]]).
     */
-  def normalizeTs(raw: DataFrame): DataFrame = {
+  private[graft] def normalizeTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     raw.schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

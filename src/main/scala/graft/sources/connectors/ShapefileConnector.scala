@@ -21,8 +21,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * geopandas/GDAL (fetcher:86-88) — is native here: [[read]] parses
   * the public ESRI format via [[ShapefileReader]] into the same
   * (attrs…, geometry WKT) frame, so the whole chain runs end-to-end
-  * from raw zip bytes. [[readConverted]] remains for tables already
-  * materialized as parquet.
+  * from raw zip bytes.
   */
 final class ShapefileConnector(client: HttpClient, cacheDir: String) {
 
@@ -91,10 +90,4 @@ final class ShapefileConnector(client: HttpClient, cacheDir: String) {
     val dir = extract(zip)
     read(spark, resolveShp(dir, expectedShpName))
   }
-
-  /** Read a shapefile table already materialized as parquet
-    * (attrs…, geometry WKT) by an earlier conversion.
-    */
-  def readConverted(spark: SparkSession, convertedPath: String): DataFrame =
-    spark.read.parquet(convertedPath)
 }

@@ -92,7 +92,6 @@ class CatalogPlanLintSpec extends SparkSpecBase {
   private lazy val lint = {
     val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
-    graft.functions.GraftFunctions.registerAll(s)
     s
   }
 

@@ -32,9 +32,15 @@ class CmsSpec extends SparkSpecBase {
 
   private def fixtureDf = fixture.toDF("doc_id", "text")
 
+  /** Both passes, as the catalog entry runs them: sketch, then scan. */
+  private def topGrams(docs: org.apache.spark.sql.DataFrame, depth: Int,
+                       prefixLen: Int, divisor: Long) =
+    TextQ.cmsTopGramsWith(docs, TextQ.cmsSketch(docs, depth, prefixLen), depth,
+      prefixLen, divisor)
+
   test("forced-collision width: estimates only ever overestimate, no false negatives") {
     // prefixLen=1 → 16 buckets/row: collisions guaranteed on ~60 grams
-    val out = TextQ.cmsTopGrams(fixtureDf, depth = 4, prefixLen = 1, divisor = 20)
+    val out = topGrams(fixtureDf, depth = 4, prefixLen = 1, divisor = 20)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     val truth = exact(fixture.map(_._2))
     val n = truth.values.sum
@@ -49,7 +55,7 @@ class CmsSpec extends SparkSpecBase {
   }
 
   test("planted heavy hitter dominates the survivor list") {
-    val out = TextQ.cmsTopGrams(fixtureDf, depth = 4, prefixLen = 3, divisor = 10)
+    val out = topGrams(fixtureDf, depth = 4, prefixLen = 3, divisor = 10)
       .collect()
     assert(out.nonEmpty)
     // 'alpha beta' occurs 41 times (40 in doc 1 via the trailing-space
@@ -60,21 +66,21 @@ class CmsSpec extends SparkSpecBase {
 
   test("production width on the corpus: estimates are near-exact and deterministic") {
     val docs = graft.sources.Tables.documents(spark, sfDir)
-    val out = TextQ.cmsTopGrams(docs, TextQ.cmsDepth, TextQ.cmsPrefixLen,
+    val out = topGrams(docs, TextQ.cmsDepth, TextQ.cmsPrefixLen,
       TextQ.cmsThresholdDivisor).collect()
     assert(out.nonEmpty, "corpus survivor list must not be empty")
     val exactFrac = out.count(r => r.getLong(1) == r.getLong(2)).toDouble / out.length
     assert(exactFrac > 0.5,
       f"at 4×4096 cells most estimates should be collision-free; got $exactFrac%.2f")
     out.foreach(r => assert(r.getLong(1) >= r.getLong(2), s"underestimate: $r"))
-    val again = TextQ.cmsTopGrams(docs, TextQ.cmsDepth, TextQ.cmsPrefixLen,
+    val again = topGrams(docs, TextQ.cmsDepth, TextQ.cmsPrefixLen,
       TextQ.cmsThresholdDivisor).collect()
     assert(out.map(_.toString).toSeq == again.map(_.toString).toSeq)
   }
 
   test("catalog query is the kernel at production parameters") {
     val a = SparkEntry.queries("q_doc_cms_topgrams")(spark, sfDir).collect()
-    val b = TextQ.cmsTopGrams(graft.sources.Tables.documents(spark, sfDir),
+    val b = topGrams(graft.sources.Tables.documents(spark, sfDir),
       TextQ.cmsDepth, TextQ.cmsPrefixLen, TextQ.cmsThresholdDivisor).collect()
     assert(a.map(_.toString).toSeq == b.map(_.toString).toSeq)
   }

@@ -37,7 +37,6 @@ class CollapseIdempotentUdfsSpec extends SparkSpecBase {
   }
 
   test("the SQL surface name (st_multi) collapses identically") {
-    graft.functions.GraftFunctions.registerAll(spark)
     polys.createOrReplaceTempView("collapse_polys")
     val df = spark.sql("SELECT st_multi(st_multi(wkt)) AS g FROM collapse_polys")
     val calls = "st_multi".r.findAllIn(df.queryExecution.optimizedPlan.toString).size

@@ -63,6 +63,13 @@ class EmbeddingNearDupSpec extends SparkSpecBase {
     assert(byId(103L)._2 == 1L && math.abs(byId(103L)._3 - math.sqrt(0.5)) < 1e-6)
   }
 
+  /** The 8×8 band-key pass the catalog entry memoizes, then its join. */
+  private def nearDupLsh(emb: org.apache.spark.sql.DataFrame, threshold: Double) =
+    SimilarityQ.embeddingNearDupLshFromKeys(
+      emb.select(col("vec_id"), explode(graft.functions.VectorFunctions.fastLshBandKeys(
+        col("embedding"), bands = 8, rowsPerBand = 8)).as("bk")),
+      emb, threshold)
+
   test("exact all-pairs finds every planted pair") {
     val exact = SimilarityQ.embeddingNearDupExact(planted, 0.9)
       .select("vec_a", "vec_b").collect()
@@ -76,7 +83,7 @@ class EmbeddingNearDupSpec extends SparkSpecBase {
     val exact = SimilarityQ.embeddingNearDupExact(planted, 0.9)
       .select("vec_a", "vec_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = SimilarityQ.embeddingNearDupLsh(planted, 0.9)
+    val lsh = nearDupLsh(planted, 0.9)
       .select("vec_a", "vec_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty)
@@ -93,7 +100,7 @@ class EmbeddingNearDupSpec extends SparkSpecBase {
     // LSH path and the exact form must return empty — and the LSH path
     // can never return MORE than exact (rerank is exact)
     val emb = graft.sources.Tables.embeddings(spark, sfDir)
-    val lsh = SimilarityQ.embeddingNearDupLsh(emb, 0.55).count()
+    val lsh = nearDupLsh(emb, 0.55).count()
     val exact = SimilarityQ.embeddingNearDupExact(emb, 0.55).count()
     assert(exact == 0L)
     assert(lsh == 0L)

@@ -24,7 +24,7 @@ class FastCosineSpec extends SparkSpecBase {
 
   test("bit-identical to the declarative cosine on random vectors") {
     val out = vecs.select(
-      VectorFunctions.cosine(col("a"), col("b")).as("slow"),
+      ReferenceKernels.cosine(col("a"), col("b")).as("slow"),
       VectorFunctions.fastCosine(col("a"), col("b")).as("fast"))
       .collect()
     out.foreach { r =>

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.functions._
+
+import graft.functions.TextFunctions.fingerprints
 import graft.queries.TextQ
 
 /** Ground truth for the no-oracle q_doc_fingerprint_neardup, graded on
@@ -22,8 +25,14 @@ class FingerprintNearDupSpec extends SparkSpecBase {
     (5L, "numbers 1 2 3 4 5 6 7 8 9 ten eleven twelve thirteen fourteen")
   ).toDF("doc_id", "text")
 
+  /** The winnowing pass the catalog entry memoizes, then its join. */
+  private def nearDup(docs: org.apache.spark.sql.DataFrame, minShared: Int) =
+    TextQ.fingerprintNearDupFromFp(
+      docs.select(col("doc_id"), explode(fingerprints(col("text"))).as("fp")).distinct(),
+      minShared)
+
   test("recovers exact copies and long-shared-substring pairs; skips unrelated docs") {
-    val found = TextQ.fingerprintNearDup(planted, minShared = 3)
+    val found = nearDup(planted, minShared = 3)
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(found.contains((1L, 3L)), "exact copies must pair")
@@ -34,7 +43,7 @@ class FingerprintNearDupSpec extends SparkSpecBase {
   }
 
   test("exact copies share their full fingerprint set (max overlap)") {
-    val shared = TextQ.fingerprintNearDup(planted, minShared = 1)
+    val shared = nearDup(planted, minShared = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     // (1,3) identical → overlap must be at least as big as any partial overlap
     assert(shared((1L, 3L)) >= shared((1L, 2L)))

@@ -67,8 +67,8 @@ class IvfAnnSpec extends SparkSpecBase {
     val emb = Tables.embeddings(spark, sfDir)
     // k > corpus/2 forces many singleton/empty lists — the path must
     // still answer with full top-k via multi-probe
-    val out = IvfFunctions.annTopK(
-      emb, emb.filter(col("vec_id") < 3), k = 256, nProbe = 96, topK = 5)
+    val out = IvfFunctions.annTopKWith(emb, emb.filter(col("vec_id") < 3),
+      IvfFunctions.trainCentroids(emb, "embedding", k = 256), nProbe = 96, topK = 5)
     val rows = out.collect()
     assert(rows.groupBy(_.getLong(0)).forall(_._2.length == 5))
     // exact top-1 must be found with this probe width on the 500-vector fixture

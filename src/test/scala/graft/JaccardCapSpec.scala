@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions.col
+
 import graft.queries.TextQ
 
 /** Cap-sensitivity of the "exact" n-gram Jaccard ground truth
@@ -19,13 +21,17 @@ import graft.queries.TextQ
   */
 class JaccardCapSpec extends SparkSpecBase {
 
-  private def pairSet(dfCap: Long): Map[(Long, Long), Double] =
-    TextQ.ngramJaccardPairs(spark, sfDir, dfCap).collect()
+  /** Jaccard ≥ 0.5 pairs of the catalog's candidate pass at `dfCap`. */
+  private def pairSet(dfCap: Int): Map[(Long, Long), Double] = {
+    val jac = col("shared").cast("double") / (col("n_a") + col("n_b") - col("shared"))
+    TextQ.candidatePairs(spark, sfDir, dfCap).filter(jac >= 0.5)
+      .select(col("doc_a"), col("doc_b"), jac).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+  }
 
   test("capped pairs are a subset of uncapped pairs, with identical jaccard") {
     val capped = pairSet(TextQ.maxShingleDf)
-    val uncapped = pairSet(Long.MaxValue)
+    val uncapped = pairSet(Int.MaxValue)
     assert(capped.keySet.subsetOf(uncapped.keySet),
       s"cap added pairs: ${capped.keySet.diff(uncapped.keySet).take(5)}")
     capped.foreach { case (k, j) =>
@@ -35,15 +41,15 @@ class JaccardCapSpec extends SparkSpecBase {
 
   test("production cap is a no-op at test SF (recall baseline is truly exact)") {
     val capped = pairSet(TextQ.maxShingleDf)
-    val uncapped = pairSet(Long.MaxValue)
+    val uncapped = pairSet(Int.MaxValue)
     assert(uncapped.nonEmpty, "no near-dup pairs in fixture")
     assert(capped.keySet == uncapped.keySet,
       s"cap-invisible pairs at test SF: ${uncapped.keySet.diff(capped.keySet).take(5)}")
   }
 
   test("a degenerate cap hides pairs (cap sensitivity is real, not theoretical)") {
-    val uncapped = pairSet(Long.MaxValue)
-    val starved = pairSet(1L)
+    val uncapped = pairSet(Int.MaxValue)
+    val starved = pairSet(1)
     assert(uncapped.nonEmpty)
     assert(starved.size < uncapped.size,
       s"cap=1 should hide shared-shingle candidates (${starved.size} vs ${uncapped.size})")

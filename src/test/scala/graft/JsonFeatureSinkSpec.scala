@@ -64,32 +64,6 @@ class JsonFeatureSinkSpec extends SparkSpecBase {
       s"NULL property key must not be dropped: $f")
   }
 
-  test("writeFeatureLines is the distributed path and reads back losslessly") {
-    val dir = tmpDir("lines")
-    JsonFeatureSink.writeFeatureLines(features, dir)
-    val back = spark.read.json(dir)
-    assert(back.count() == 197)
-    assert(back.select("properties.zone_name").distinct().count() == 197)
-    // geometry came through as a real nested object, not a string
-    assert(back.select("geometry.type").distinct().head.getString(0) == "MultiPolygon")
-  }
-
-  test("writeFeatureLines stays distributed at 100k features — no driver collect, no 1-file coalesce") {
-    val big = spark.range(100000).toDF("zone_key")
-      .repartition(8)
-      .select(JsonFeatureSink.featureJson(
-        format_string("""{"type":"Point","coordinates":[%d,0]}""", col("zone_key")),
-        col("zone_key")).as("feature"))
-    val dir = tmpDir("lines100k")
-    JsonFeatureSink.writeFeatureLines(big, dir)
-    val parts = Files.list(Paths.get(dir)).iterator()
-    val partFiles = Iterator.continually(parts).takeWhile(_.hasNext)
-      .map(_.next().getFileName.toString)
-      .count(n => n.startsWith("part-")) // not the .part-*.crc checksums
-    assert(partFiles == 8, s"expected one output file per partition, got $partFiles")
-    assert(spark.read.json(dir).count() == 100000)
-  }
-
   test("empty input yields an empty FeatureCollection (routes.py:95-97 fallback)") {
     val empty = features.limit(0)
     assert(JsonFeatureSink.featureCollection(empty) ==

@@ -18,7 +18,8 @@ class LshBandKeysFastSpec extends SparkSpecBase {
 
   test("bit-identical to the UDF for the ANN config (16 bands x 4 planes)") {
     val udfKeys = keysOf(emb.select(col("vec_id"),
-      VectorFunctions.lshBandKeys()(col("embedding")).as("k")))
+      ReferenceKernels.lshBandKeys(VectorFunctions.lshBands,
+        VectorFunctions.lshRowsPerBand)(col("embedding")).as("k")))
     val natKeys = keysOf(emb.select(col("vec_id"),
       VectorFunctions.fastLshBandKeys(col("embedding")).as("k")))
     assert(udfKeys == natKeys)
@@ -26,7 +27,7 @@ class LshBandKeysFastSpec extends SparkSpecBase {
 
   test("bit-identical to the UDF for the near-dup config (8 bands x 8 planes)") {
     val udfKeys = keysOf(emb.select(col("vec_id"),
-      VectorFunctions.lshBandKeys(bands = 8, rowsPerBand = 8)(col("embedding")).as("k")))
+      ReferenceKernels.lshBandKeys(bands = 8, rowsPerBand = 8)(col("embedding")).as("k")))
     val natKeys = keysOf(emb.select(col("vec_id"),
       VectorFunctions.fastLshBandKeys(col("embedding"), bands = 8, rowsPerBand = 8).as("k")))
     assert(udfKeys == natKeys)

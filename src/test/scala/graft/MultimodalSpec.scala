@@ -63,16 +63,6 @@ class MultimodalSpec extends SparkSpecBase {
     assert(bad.getMessage != null)
   }
 
-  test("resize stub: deterministic, binary-in/binary-out, dimension-dependent size") {
-    val p = Array[Byte](1, 2, 3)
-    val r1 = MultimodalFunctions.resizeStub(p, 64, 64)
-    val r2 = MultimodalFunctions.resizeStub(p, 64, 64)
-    assert(r1.toSeq == r2.toSeq)
-    assert(r1.length == 64)
-    assert(MultimodalFunctions.resizeStub(p, 128, 64).length == 128)
-    assert(r1.toSeq.take(3) == Seq[Byte](1, 2, 3))
-  }
-
   test("frame sampling yields n chunks covering the payload") {
     val p = (0 until 90).map(_.toByte).toArray
     val frames = MultimodalFunctions.frameSampleStub(p, 9)

@@ -134,7 +134,7 @@ class PlanAuditSpec extends SparkSpecBase {
     // and the pair DERIVATION itself reads its checkpointed shingle
     // table for all four consumers (sizes, DF cap, both join sides)
     // instead of re-running tokenize+explode+distinct
-    val deriv = graft.queries.TextQ.ngramJaccardPairs(spark, sfDir)
+    val deriv = graft.queries.TextQ.candidatePairs(spark, sfDir, graft.queries.TextQ.maxShingleDf)
       .queryExecution.executedPlan.toString
     assert(!deriv.contains("FileScan"),
       s"shingle pipeline must run once (checkpoint), never per consumer:\n$deriv")

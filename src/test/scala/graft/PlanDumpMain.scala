@@ -15,7 +15,6 @@ object PlanDumpMain {
     val spark = if (noAqe) {
       val s = base.newSession()
       s.conf.set("spark.sql.adaptive.enabled", "false")
-      graft.functions.GraftFunctions.registerAll(s)
       s
     } else base
     val rest = args.filterNot(_ == "--no-aqe")

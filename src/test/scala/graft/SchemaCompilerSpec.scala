@@ -5,9 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.{Registry, SchemaCompiler}
 
-/** K3 — type-string parsing, StructType compilation, and DDL generation
-  * (engine mirror of storage.py:73-183).
-  */
+/** K3 — type-string parsing (engine mirror of storage.py:73-183). */
 class SchemaCompilerSpec extends AnyFunSuite {
 
   test("SQL type strings map to the documented Spark types (SURVEY §1.2)") {
@@ -30,46 +28,11 @@ class SchemaCompilerSpec extends AnyFunSuite {
     assert(SchemaCompiler.toSparkType("string") == StringType)
   }
 
-  test("toStructType: required columns are non-nullable") {
-    val st = SchemaCompiler.toStructType(Registry.foodSupplyGap)
-    assert(st.fieldNames.head == "year")
-    assert(!st("year").nullable)
-    assert(st("nta_name").nullable)
-    assert(st("supply_gap_lbs").dataType == DecimalType(12, 2))
-  }
-
-  test("DDL preserves the reference's widening quirks (storage.py:86-96)") {
-    assert(SchemaCompiler.toDdlType("FLOAT") == "NUMERIC")
-    assert(SchemaCompiler.toDdlType("DATE") == "TIMESTAMP")
-    assert(SchemaCompiler.toDdlType("VARCHAR(20)") == "VARCHAR(20)")
-    assert(SchemaCompiler.toDdlType("GEOMETRY('MULTIPOLYGON', srid=4326)") ==
-      "GEOMETRY(MULTIPOLYGON, 4326)")
-  }
-
-  test("toDdl emits CREATE TABLE with PK, NOT NULL, defaults, UNIQUE, and indexes") {
-    val ddl = SchemaCompiler.toDdl(Registry.foodSupplyGap)
-    val create = ddl.head
-    assert(create.startsWith("CREATE TABLE IF NOT EXISTS food_supply_gaps"))
-    assert(create.contains("year INTEGER NOT NULL"))
-    assert(create.contains("ingestion_timestamp TIMESTAMP NOT NULL DEFAULT CURRENT_TIMESTAMP"))
-    assert(create.contains(
-      "CONSTRAINT uq_food_supply_gaps_dataset_id_year_nta_code UNIQUE (dataset_id, year, nta_code)"))
-    assert(ddl.exists(_ ==
-      "CREATE INDEX IF NOT EXISTS idx_dataset_year ON food_supply_gaps (dataset_id, year)"))
-    assert(ddl.size == 4) // create + 3 indexes
-  }
-
-  test("toDdl renders primary keys (census_acs composite pk)") {
-    val create = SchemaCompiler.toDdl(Registry.censusAcs).head
-    assert(create.contains("PRIMARY KEY (zip_code, year)"))
-  }
-
   test("all five registered datasets compile to schemas") {
     assert(Registry.all.size == 5)
     Registry.all.values.foreach { spec =>
-      val st = SchemaCompiler.toStructType(spec)
-      assert(st.fields.nonEmpty, spec.key)
-      assert(SchemaCompiler.toDdl(spec).head.contains(spec.tableName))
+      assert(spec.columns.nonEmpty, spec.key)
+      spec.columns.foreach(c => SchemaCompiler.toSparkType(c.sqlType))
     }
   }
 }

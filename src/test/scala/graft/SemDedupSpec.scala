@@ -34,8 +34,13 @@ class SemDedupSpec extends SparkSpecBase {
     toEmbDf(rows)
   }
 
+  /** SemDeDup with centroids trained on the frame itself. */
+  private def semDedup(emb: org.apache.spark.sql.DataFrame, k: Int, tau: Double) =
+    SimilarityQ.semDedupWith(emb,
+      graft.functions.IvfFunctions.trainCentroids(emb, "embedding", k, seed = 42), tau)
+
   test("each planted duplicate group collapses to exactly one survivor") {
-    val kept = SimilarityQ.semDedup(groups, k = 4, tau = 0.95)
+    val kept = semDedup(groups, k = 4, tau = 0.95)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(kept.size == 4, s"expected 4 survivors, got ${kept.size}: $kept")
     // one survivor per planted group, never two from the same group
@@ -50,7 +55,7 @@ class SemDedupSpec extends SparkSpecBase {
       val v = Array.fill(dim)(0f); v(i * 5) = 1f; (i.toLong, v)
     }
     val df = toEmbDf(rows)
-    val kept = SimilarityQ.semDedup(df, k = 3, tau = 0.95)
+    val kept = semDedup(df, k = 3, tau = 0.95)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(kept == (0 until 12).map(_.toLong).toSet,
       s"dropped vectors with no near-dup: ${(0 until 12).map(_.toLong).toSet.diff(kept)}")

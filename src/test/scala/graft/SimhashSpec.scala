@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions.{hammingDist, simhash64, tokens}
+import graft.functions.TextFunctions.{fastSimhash64, hammingDist, tokens}
 
 /** Ground truth for the no-oracle q_doc_simhash: hamming-distance
   * sanity of the signature itself, plus end-to-end behavior on the
@@ -13,7 +13,7 @@ class SimhashSpec extends SparkSpecBase {
 
   private def sig(texts: String*): Map[String, Long] =
     texts.toSeq.toDF("t")
-      .select(col("t"), simhash64(tokens(col("t"))).as("s"))
+      .select(col("t"), fastSimhash64(tokens(col("t"))).as("s"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   test("identical token streams hash identically (hamming 0)") {
@@ -60,11 +60,11 @@ class SimhashSpec extends SparkSpecBase {
   }
 
   test("native simhash64 is bit-identical to the UDF and stays in codegen") {
-    import graft.functions.TextFunctions.fastSimhash64
     val docs = Seq("alpha beta gamma delta", "alpha beta beta gamma",
       "completely different tokens").toDF("t")
       .select(tokens(col("t")).as("tok"))
-    val viaUdf = docs.select(simhash64(col("tok")).as("s")).collect().map(_.getLong(0))
+    val viaUdf = docs.select(ReferenceKernels.simhash64(col("tok")).as("s"))
+      .collect().map(_.getLong(0))
     val viaNative = docs.select(fastSimhash64(col("tok")).as("s")).collect().map(_.getLong(0))
     assert(viaUdf.toSeq == viaNative.toSeq)
     val plan = docs.select(fastSimhash64(col("tok")).as("s"))

@@ -1,14 +1,11 @@
 package graft
 
-import graft.functions.GraftFunctions
-
 /** The SQL surface: every registered engine function callable from
   * spark.sql with the same results as the DataFrame/Scala forms.
   */
 class SqlSurfaceSpec extends SparkSpecBase {
 
   test("geometry codecs round-trip through pure SQL") {
-    GraftFunctions.registerAll(spark)
     val row = spark.sql(
       """SELECT
         |  st_asgeojson('POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))') AS gj,
@@ -25,7 +22,6 @@ class SqlSurfaceSpec extends SparkSpecBase {
   }
 
   test("text primitives work from SQL and agree with the Scala surface") {
-    GraftFunctions.registerAll(spark)
     val row = spark.sql(
       """SELECT
         |  lang_id('der rat der stadt ist mit der planung nicht zufrieden') AS lang,
@@ -42,8 +38,9 @@ class SqlSurfaceSpec extends SparkSpecBase {
   }
 
   test("every native function resolves from SQL in a child session with no registration call") {
-    // one call per function GraftExtensions injects: a function left out
-    // of the extension fails here as an unresolved routine
+    // one call per function GraftExtensions injects (the 9 native
+    // expressions, then the 6 ScalaUDF aliases): a function left out of
+    // the extension fails here as an unresolved routine
     val calls = Seq(
       "fast_cosine" -> "fast_cosine(CAST(array(1.0, 0.0) AS ARRAY<FLOAT>), CAST(array(1.0, 0.0) AS ARRAY<FLOAT>))",
       "lsh_band_keys" -> "lsh_band_keys(CAST(array(0.5, -0.5) AS ARRAY<FLOAT>), 2, 4)",
@@ -53,7 +50,14 @@ class SqlSurfaceSpec extends SparkSpecBase {
       "bpe_token_count" -> "bpe_token_count('low lower', array('l o', 'lo w'))",
       "morton_interleave" -> "morton_interleave(3L, 5L)",
       "hilbert_index" -> "hilbert_index(3L, 5L)",
-      "vec_all_finite" -> "vec_all_finite(CAST(array(1.0, 2.0) AS ARRAY<FLOAT>))")
+      "vec_all_finite" -> "vec_all_finite(CAST(array(1.0, 2.0) AS ARRAY<FLOAT>))",
+      "lang_id" -> "lang_id('der rat der stadt')",
+      "winnow_fingerprints" -> "winnow_fingerprints('a long sentence for fingerprinting')",
+      "st_asgeojson" -> "st_asgeojson('POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))')",
+      "geojson_to_wkt" -> """geojson_to_wkt('{"type":"Point","coordinates":[1,2]}')""",
+      "st_multi" -> "st_multi('POLYGON ((0 0, 1 0, 1 1, 0 0))')",
+      "st_envelope_box" -> "st_envelope_box('POLYGON ((0 0, 1 0, 1 1, 0 0))')")
+    assert(calls.size == 15)
     val child = spark.newSession()
     calls.foreach { case (name, call) =>
       assert(call.startsWith(s"$name("))

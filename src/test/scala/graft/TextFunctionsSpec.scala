@@ -41,7 +41,7 @@ class TextFunctionsSpec extends SparkSpecBase {
   test("minhash signatures: identical shingle sets agree, length is k") {
     val df = Seq("a b c d e f", "a b c d e f", "totally different words here now")
       .toDF("t")
-      .select(minhashSig(shingles(tokens(col("t")), 3)).as("sig"))
+      .select(fastMinhashSig(shingles(tokens(col("t")), 3)).as("sig"))
     val sigs = df.collect().map(_.getSeq[Long](0))
     assert(sigs.forall(_.length == minhashK))
     assert(sigs(0) == sigs(1))
@@ -55,7 +55,7 @@ class TextFunctionsSpec extends SparkSpecBase {
     val a = words.take(25).mkString(" ")
     val b = words.drop(5).mkString(" ")
     val sigs = Seq(a, b).toDF("t")
-      .select(minhashSig(shingles(tokens(col("t")), 3)).as("sig"))
+      .select(fastMinhashSig(shingles(tokens(col("t")), 3)).as("sig"))
       .collect().map(_.getSeq[Long](0))
     val est = sigs(0).zip(sigs(1)).count { case (x, y) => x == y }.toDouble / minhashK
     // true jaccard of the 3-shingle sets: |∩|=18, |∪|=28 → ≈ 0.643
@@ -81,7 +81,7 @@ class TextFunctionsSpec extends SparkSpecBase {
     val docs = Seq("alpha beta gamma delta epsilon", "alpha beta gamma delta zeta",
       "totally different words here now").toDF("t")
       .select(shingles(tokens(col("t")), 3).as("sh"))
-    val viaUdf = docs.select(minhashSig(col("sh")).as("sig"))
+    val viaUdf = docs.select(ReferenceKernels.minhashSig(col("sh")).as("sig"))
       .collect().map(_.getSeq[Long](0))
     val viaNative = docs.select(fastMinhashSig(col("sh")).as("sig"))
       .collect().map(_.getSeq[Long](0))

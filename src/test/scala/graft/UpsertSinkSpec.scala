@@ -70,20 +70,6 @@ class UpsertSinkSpec extends SparkSpecBase {
     assert(a.isNullAt(a.fieldIndex("year")))
   }
 
-  test("upsertSql: DO UPDATE SET over non-key columns (storage.py:265-279)") {
-    val sql = UpsertSink.upsertSql("zillow_zori",
-      Seq("zip_code", "rent_index", "date"), Seq("zip_code"))
-    assert(sql ==
-      "INSERT INTO zillow_zori (zip_code, rent_index, date) VALUES (?, ?, ?) " +
-        "ON CONFLICT (zip_code) DO UPDATE SET rent_index = EXCLUDED.rent_index, " +
-        "date = EXCLUDED.date")
-  }
-
-  test("upsertSql: keys-only degenerates to DO NOTHING (storage.py:282-284)") {
-    val sql = UpsertSink.upsertSql("t", Seq("k1", "k2"), Seq("k1", "k2"))
-    assert(sql == "INSERT INTO t (k1, k2) VALUES (?, ?) ON CONFLICT (k1, k2) DO NOTHING")
-  }
-
   test("metadata table keeps one latest row per dataset (K5)") {
     val dir = freshDir()
     MetadataTable.update(spark, dir, "4kc9-zrs2", "food_supply_gaps", 100,
@@ -92,7 +78,7 @@ class UpsertSinkSpec extends SparkSpecBase {
       now = Timestamp.valueOf("2026-01-02 00:00:00"))
     MetadataTable.update(spark, dir, "4kc9-zrs2", "food_supply_gaps", 120,
       now = Timestamp.valueOf("2026-02-01 00:00:00"))
-    val rows = MetadataTable.read(spark, dir).collect()
+    val rows = spark.read.parquet(dir).collect()
       .map(r => r.getAs[String]("dataset_id") ->
         (r.getAs[Long]("record_count"), r.getAs[Timestamp]("last_ingestion")))
       .toMap

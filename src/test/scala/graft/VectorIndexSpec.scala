@@ -8,11 +8,9 @@ import graft.sources.Tables
 
 /** The persistent IVF index (round-12 verdict #5): a search against
   * the materialized centroid + bucketed inverted-list tables must
-  * (a) equal the in-session IVF path bit-for-bit, (b) read ONLY the
-  * probed buckets with the index side never sitting under an
-  * Exchange, and (c) absorb an appended batch exactly as if the index
-  * had been built over the full corpus with the same centroids — the
-  * no-retrain growth contract.
+  * (a) equal the in-session IVF path bit-for-bit, and (b) read ONLY
+  * the probed buckets with the index side never sitting under an
+  * Exchange; (c) a changed corpus must un-match the stored signature.
   */
 class VectorIndexSpec extends SparkSpecBase {
 
@@ -106,235 +104,6 @@ class VectorIndexSpec extends SparkSpecBase {
       "the modulo cut must select more than one query")
   }
 
-  test("appendCoded with EXISTING kernels: grown coded index == same-kernel rebuild") {
-    import graft.functions.PqFunctions
-    val emb = Tables.embeddings(spark, sfDir)
-    val centroids = IvfFunctions.trainCentroids(emb, "embedding", k = 16, seed = 42)
-    val bcC = IvfFunctions.broadcastCentroids(emb, centroids)
-    val resid = emb
-      .withColumn("cid", IvfFunctions.assignUdf(bcC)(col("embedding")))
-      .withColumn("r", IvfFunctions.residualUdf(bcC)(col("embedding"), col("cid")))
-      .select(col("vec_id"), col("r"))
-    val cbs = PqFunctions.trainCodebooks(resid, "r")
-    val corpus = emb.filter(col("vec_id") % 3 =!= 0)
-    val batch = emb.filter(col("vec_id") % 3 === 0)
-    val queries = emb.filter(col("vec_id") < 5)
-
-    spark.sql("DROP TABLE IF EXISTS vecidxpq_grow")
-    spark.sql("DROP TABLE IF EXISTS vecidxpq_grow_centroids")
-    spark.sql("DROP TABLE IF EXISTS vecidxpq_grow_codebooks")
-    VectorIndex.buildCoded(corpus, "vecidxpq_grow", centroids, cbs)
-    VectorIndex.appendCoded(spark, "vecidxpq_grow", batch)
-
-    spark.sql("DROP TABLE IF EXISTS vecidxpq_full")
-    spark.sql("DROP TABLE IF EXISTS vecidxpq_full_centroids")
-    spark.sql("DROP TABLE IF EXISTS vecidxpq_full_codebooks")
-    VectorIndex.buildCoded(emb, "vecidxpq_full", centroids, cbs)
-
-    val grown = rows(VectorIndex.searchCoded(spark, "vecidxpq_grow", queries,
-      emb, nProbe = 6, pqCandidates = 64, topK = 10))
-    val rebuilt = rows(VectorIndex.searchCoded(spark, "vecidxpq_full", queries,
-      emb, nProbe = 6, pqCandidates = 64, topK = 10))
-    assert(grown == rebuilt,
-      "appendCoded must be indistinguishable from a same-kernel full rebuild")
-  }
-
-  private def indexFiles(table: String): Int = {
-    val loc = java.nio.file.Paths.get(
-      spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
-    val stream = java.nio.file.Files.walk(loc)
-    try {
-      var n = 0
-      stream.iterator().forEachRemaining { p =>
-        if (p.toString.endsWith(".parquet") &&
-            java.nio.file.Files.isRegularFile(p)) n += 1
-      }
-      n
-    } finally stream.close()
-  }
-
-  test("compact bounds append fragmentation; search results bit-identical; pruning intact") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val centroids = IvfFunctions.trainCentroids(emb, "embedding", k = 16, seed = 42)
-    val queries = emb.filter(col("vec_id") < 5)
-    Seq("vecidx_gc", "vecidx_gc_centroids", "vecidx_gc_tombstones",
-      "vecidx_gc_compacting")
-      .foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        graft.sink.BandIndex.clearOrphanedLocation(spark, t)
-      }
-    // build + 3 appends → 4 file sets per non-empty bucket
-    VectorIndex.build(emb.filter(col("vec_id") % 4 === 0), "vecidx_gc", centroids)
-    (1 to 3).foreach { r =>
-      VectorIndex.append(spark, "vecidx_gc", emb.filter(col("vec_id") % 4 === r))
-    }
-    val fragmented = indexFiles("vecidx_gc")
-    assert(fragmented > 8, s"4 write rounds must fragment past 8 files, had $fragmented")
-    val beforeSearch = rows(VectorIndex.search(spark, "vecidx_gc", queries,
-      nProbe = 6, topK = 10))
-    val (before, after) = VectorIndex.compact(spark, "vecidx_gc")
-    assert(before == fragmented && after <= 8,
-      s"compaction must land at most one file per bucket, got $before -> $after")
-    assert(rows(VectorIndex.search(spark, "vecidx_gc", queries,
-      nProbe = 6, topK = 10)) == beforeSearch,
-      "search must be bit-identical across compaction")
-    val plan = VectorIndex.search(spark, "vecidx_gc",
-      emb.filter(col("vec_id") === 0), nProbe = 2, topK = 5)
-      .queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    assert(plan.contains("SelectedBucketsCount:"),
-      s"compaction must preserve bucket pruning:\n$plan")
-  }
-
-  test("delete tombstones mask neighbors immediately; compact purges rows, mask survives unless cleared") {
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, sfDir)
-    val centroids = IvfFunctions.trainCentroids(emb, "embedding", k = 16, seed = 42)
-    val queries = emb.filter(col("vec_id") < 5)
-    Seq("vecidx_del", "vecidx_del_centroids", "vecidx_del_tombstones",
-      "vecidx_del_compacting")
-      .foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        graft.sink.BandIndex.clearOrphanedLocation(spark, t)
-      }
-    VectorIndex.build(emb, "vecidx_del", centroids)
-    val full = rows(VectorIndex.search(spark, "vecidx_del", queries,
-      nProbe = 6, topK = 10))
-    // delete the top neighbor of query 0 — it must vanish from results
-    val victim = full.filter(_._1 == 0L).minBy(_._3)._2
-    VectorIndex.delete(spark, "vecidx_del", Seq(victim).toDF("vec_id"))
-    val masked = rows(VectorIndex.search(spark, "vecidx_del", queries,
-      nProbe = 6, topK = 10))
-    assert(!masked.exists(_._2 == victim),
-      s"deleted vector $victim must never surface as a neighbor")
-    // physical rows still present until compact
-    assert(spark.table("vecidx_del").filter(col("vec_id") === victim).count() == 1)
-    VectorIndex.compact(spark, "vecidx_del")
-    assert(spark.table("vecidx_del").filter(col("vec_id") === victim).count() == 0,
-      "compact must purge tombstoned rows physically")
-    assert(spark.catalog.tableExists("vecidx_del_tombstones"),
-      "compact must RETAIN the tombstone mask by default — a streaming " +
-        "epoch replayed after the purge would otherwise resurrect the vector")
-    assert(rows(VectorIndex.search(spark, "vecidx_del", queries,
-      nProbe = 6, topK = 10)) == masked,
-      "post-compact search must equal the masked results exactly")
-    // clearMask = true is the explicit no-replay-window-open opt-in
-    VectorIndex.compact(spark, "vecidx_del", clearMask = true)
-    assert(!spark.catalog.tableExists("vecidx_del_tombstones"),
-      "compact(clearMask = true) must drop the mask")
-  }
-
-  test("a crashed epoch replayed after delete+compact does not resurrect the deleted vector") {
-    import graft.functions.PqFunctions
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, sfDir)
-    val centroids = IvfFunctions.trainCentroids(emb, "embedding", k = 16, seed = 42)
-    val bcC = IvfFunctions.broadcastCentroids(emb, centroids)
-    val resid = emb
-      .withColumn("cid", IvfFunctions.assignUdf(bcC)(col("embedding")))
-      .withColumn("r", IvfFunctions.residualUdf(bcC)(col("embedding"), col("cid")))
-      .select(col("vec_id"), col("r"))
-    val cbs = PqFunctions.trainCodebooks(resid, "r")
-    val queries = emb.filter(col("vec_id") < 5)
-    Seq("vecidxpq_replay", "vecidxpq_replay_centroids",
-      "vecidxpq_replay_codebooks", "vecidxpq_replay_tombstones",
-      "vecidxpq_replay_compacting")
-      .foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        graft.sink.BandIndex.clearOrphanedLocation(spark, t)
-      }
-    val base = emb.filter(col("vec_id") % 2 === 0)
-    val epoch = emb.filter(col("vec_id") % 2 === 1)
-    VectorIndex.buildCoded(base, "vecidxpq_replay", centroids, cbs)
-    // the epoch commits to the TABLE but (scenario) the stream
-    // checkpoint does not — then, while the stream is down, one of the
-    // epoch's vectors is deleted and the index compacted
-    VectorIndex.appendCodedIdempotent(spark, "vecidxpq_replay", epoch)
-    val victim = epoch.select(col("vec_id")).orderBy(col("vec_id").asc)
-      .head().getLong(0)
-    VectorIndex.delete(spark, "vecidxpq_replay", Seq(victim).toDF("vec_id"))
-    VectorIndex.compact(spark, "vecidxpq_replay")
-    val masked = rows(VectorIndex.searchCoded(spark, "vecidxpq_replay",
-      queries, emb, nProbe = 6, pqCandidates = 64, topK = 10))
-    assert(!masked.exists(_._2 == victim))
-    // restart: the stream re-fires the SAME epoch
-    VectorIndex.appendCodedIdempotent(spark, "vecidxpq_replay", epoch)
-    assert(spark.table("vecidxpq_replay")
-      .filter(col("vec_id") === victim).count() == 0,
-      "replayed epoch must not physically re-add a masked vector")
-    assert(rows(VectorIndex.searchCoded(spark, "vecidxpq_replay",
-      queries, emb, nProbe = 6, pqCandidates = 64, topK = 10)) == masked,
-      "replayed epoch must not change search results after delete+compact")
-  }
-
-  test("coded index: delete + compact keep searchCoded identical to the masked view") {
-    import graft.functions.PqFunctions
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, sfDir)
-    val centroids = IvfFunctions.trainCentroids(emb, "embedding", k = 16, seed = 42)
-    val bcC = IvfFunctions.broadcastCentroids(emb, centroids)
-    val resid = emb
-      .withColumn("cid", IvfFunctions.assignUdf(bcC)(col("embedding")))
-      .withColumn("r", IvfFunctions.residualUdf(bcC)(col("embedding"), col("cid")))
-      .select(col("vec_id"), col("r"))
-    val cbs = PqFunctions.trainCodebooks(resid, "r")
-    val queries = emb.filter(col("vec_id") < 5)
-    Seq("vecidxpq_del", "vecidxpq_del_centroids", "vecidxpq_del_codebooks",
-      "vecidxpq_del_tombstones", "vecidxpq_del_compacting")
-      .foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        graft.sink.BandIndex.clearOrphanedLocation(spark, t)
-      }
-    VectorIndex.buildCoded(emb, "vecidxpq_del", centroids, cbs)
-    val full = rows(VectorIndex.searchCoded(spark, "vecidxpq_del", queries,
-      emb, nProbe = 6, pqCandidates = 64, topK = 10))
-    val victim = full.filter(_._1 == 0L).minBy(_._3)._2
-    VectorIndex.delete(spark, "vecidxpq_del", Seq(victim).toDF("vec_id"))
-    val masked = rows(VectorIndex.searchCoded(spark, "vecidxpq_del", queries,
-      emb, nProbe = 6, pqCandidates = 64, topK = 10))
-    assert(!masked.exists(_._2 == victim))
-    VectorIndex.compact(spark, "vecidxpq_del")
-    assert(rows(VectorIndex.searchCoded(spark, "vecidxpq_del", queries,
-      emb, nProbe = 6, pqCandidates = 64, topK = 10)) == masked,
-      "coded search must be stable across tombstone purge")
-    assert(spark.catalog.tableExists("vecidxpq_del_tombstones"),
-      "the mask survives a default compact (replay-window safety)")
-  }
-
-  test("stale-reuse guard: centroidsMatch/codebooksMatch detect a content-swapped corpus") {
-    import graft.functions.PqFunctions
-    val emb = Tables.embeddings(spark, sfDir)
-    val centroids = IvfFunctions.trainCentroids(emb, "embedding", k = 16, seed = 42)
-    spark.sql("DROP TABLE IF EXISTS vecidx_guard")
-    spark.sql("DROP TABLE IF EXISTS vecidx_guard_centroids")
-    VectorIndex.build(emb, "vecidx_guard", centroids)
-    assert(VectorIndex.centroidsMatch(spark, "vecidx_guard", centroids),
-      "a faithful rebuild of the same corpus must match its stored quantizer")
-    // a regenerated corpus (same vec_ids, different embeddings) trains
-    // different centroids — the guard must refuse the stale index
-    val perturbed = centroids.map(_.clone())
-    perturbed(0)(0) += 1e-9
-    assert(!VectorIndex.centroidsMatch(spark, "vecidx_guard", perturbed),
-      "any content drift must be detected exactly — no tolerance window")
-    assert(!VectorIndex.centroidsMatch(spark, "vecidx_guard", centroids.drop(1)),
-      "a different k must be detected")
-
-    val bcC = IvfFunctions.broadcastCentroids(emb, centroids)
-    val resid = emb
-      .withColumn("cid", IvfFunctions.assignUdf(bcC)(col("embedding")))
-      .withColumn("r", IvfFunctions.residualUdf(bcC)(col("embedding"), col("cid")))
-      .select(col("vec_id"), col("r"))
-    val cbs = PqFunctions.trainCodebooks(resid, "r")
-    spark.sql("DROP TABLE IF EXISTS vecidxpq_guard")
-    spark.sql("DROP TABLE IF EXISTS vecidxpq_guard_centroids")
-    spark.sql("DROP TABLE IF EXISTS vecidxpq_guard_codebooks")
-    VectorIndex.buildCoded(emb, "vecidxpq_guard", centroids, cbs)
-    assert(VectorIndex.codebooksMatch(spark, "vecidxpq_guard", cbs))
-    val cbsPerturbed = cbs.map(_.map(_.clone()))
-    cbsPerturbed(0)(0)(0) += 1e-9
-    assert(!VectorIndex.codebooksMatch(spark, "vecidxpq_guard", cbsPerturbed))
-  }
-
   test("content-signature guard: one changed row ANYWHERE is detected; quantizer compare is sample-blind to it") {
     val emb = Tables.embeddings(spark, sfDir)
     val centroids = IvfFunctions.trainCentroids(emb, "embedding", k = 16, seed = 42)
@@ -363,35 +132,5 @@ class VectorIndexSpec extends SparkSpecBase {
     assert(VectorIndex.signatureMatches(spark, "vecidx_sig",
       emb.repartition(7).sortWithinPartitions(col("vec_id").desc)),
       "the signature must not depend on row order or partitioning")
-  }
-
-  test("append assigns with the EXISTING centroids: grown index == full rebuild") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val centroids = IvfFunctions.trainCentroids(emb, "embedding", k = 16, seed = 42)
-    val corpus = emb.filter(col("vec_id") % 3 =!= 0)
-    val batch = emb.filter(col("vec_id") % 3 === 0)
-    val queries = emb.filter(col("vec_id") < 5)
-
-    spark.sql("DROP TABLE IF EXISTS vecidx_grow")
-    spark.sql("DROP TABLE IF EXISTS vecidx_grow_centroids")
-    VectorIndex.build(corpus, "vecidx_grow", centroids)
-    VectorIndex.append(spark, "vecidx_grow", batch)
-
-    spark.sql("DROP TABLE IF EXISTS vecidx_full")
-    spark.sql("DROP TABLE IF EXISTS vecidx_full_centroids")
-    VectorIndex.build(emb, "vecidx_full", centroids)
-
-    val grown = rows(VectorIndex.search(spark, "vecidx_grow", queries,
-      nProbe = 6, topK = 10))
-    val rebuilt = rows(VectorIndex.search(spark, "vecidx_full", queries,
-      nProbe = 6, topK = 10))
-    assert(grown == rebuilt,
-      "append must be indistinguishable from a same-centroid full rebuild")
-    // and the grown index still bucket-prunes (append preserved the spec)
-    val one = emb.filter(col("vec_id") === 0)
-    val plan = VectorIndex.search(spark, "vecidx_grow", one, nProbe = 2, topK = 5)
-      .queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    assert(plan.contains("SelectedBucketsCount:"),
-      s"append must preserve the bucket spec:\n$plan")
   }
 }

@@ -87,9 +87,9 @@ class YamlRegistrySpec extends SparkSpecBase {
     assert(food.transformerClass.endsWith("FoodSupplyGapTransformer"))
     assert(food.apiLimit.contains(1000L) && food.apiTimeout.contains(30L))
     // column dialect: string+max_length -> VARCHAR(n); ranges carried
-    val nta = food.spec.column("nta_code").get
+    val nta = food.spec.columns.find(_.name == "nta_code").get
     assert(nta.sqlType == "VARCHAR(10)" && nta.required)
-    val pct = food.spec.column("food_insecure_pct").get
+    val pct = food.spec.columns.find(_.name == "food_insecure_pct").get
     assert(pct.min.contains(0.0) && pct.max.contains(100.0))
     assert(SchemaCompiler.toSparkType(pct.sqlType) ==
       org.apache.spark.sql.types.DoubleType)
